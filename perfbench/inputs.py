@@ -76,21 +76,49 @@ def write_skewed_graph(out_dir: str, src: np.ndarray, dst: np.ndarray, num_verti
 
 
 # ------------------------------------------------------------ TPC-H-ish tables
+#
+# Distributions measured on the repository's sf0.1 testdata (see README,
+# "Generated tables against the testdata"): o_custkey uniform over the
+# customers (all but one of 15k customers have orders, 10 on average);
+# events in timestamp order with event_id ascending, spread uniformly over
+# 1.5k users across 30 days; documents of 10-100 words drawn uniformly from
+# a 30-word vocabulary, 5% of them marked " dup" (a few of those repeat an
+# earlier text), language en 41% and de/es/fr/zh about 15% each, and
+# n_chars the text length.
 
-_LANGS = np.array(["en", "de", "es", "fr", "zh"])
+_LANGS = np.array(["en", "zh", "es", "fr", "de"])
+_LANG_SHARE = np.array([0.412, 0.151, 0.149, 0.148, 0.140])
+_VOCAB = np.array(
+    "a agg batch big column customer data fast filter group hash join key line merge "
+    "order part query row scan slow small sort spark stream table the value vector window".split()
+)
+_DUP_SHARE = 0.05
+_DUP_COPY_SHARE = 0.03
 _EPOCH_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
 _MONTH_US = 30 * 86_400 * 1_000_000
-_VOCAB = np.array([f"w{i}" for i in range(4000)])
 
 
 def _write(out_dir: str, name: str, columns: dict) -> None:
     pq.write_table(pa.table(columns), os.path.join(out_dir, f"{name}.parquet"))
 
 
+def _documents(rng: np.random.Generator, n_docs: int) -> list[str]:
+    texts = [
+        " ".join(_VOCAB[rng.integers(len(_VOCAB), size=int(k))])
+        for k in rng.integers(10, 101, size=n_docs)
+    ]
+    for i in np.flatnonzero(rng.random(n_docs) < _DUP_SHARE):
+        if i > 0 and rng.random() < _DUP_COPY_SHARE:
+            texts[i] = texts[int(rng.integers(i))]
+        if not texts[i].endswith(" dup"):
+            texts[i] += " dup"
+    return texts
+
+
 def write_tpch_tables(out_dir: str, sf: float, seed: int) -> dict[str, int]:
     """Write the columns the sf workload's queries and oracles read, with
-    the repository testdata's row counts per scale factor; returns row
-    counts."""
+    the repository testdata's row counts and key distributions per scale
+    factor; returns row counts."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
     n_cust = max(int(150_000 * sf), 10)
@@ -103,23 +131,20 @@ def write_tpch_tables(out_dir: str, sf: float, seed: int) -> dict[str, int]:
     _write(out_dir, "orders", {
         "o_orderkey": np.arange(n_ord, dtype=np.int64),
         "o_custkey": rng.integers(n_cust, size=n_ord).astype(np.int64),
-        "o_totalprice": np.round(rng.uniform(900.0, 500_000.0, n_ord), 2),
+        "o_totalprice": np.round(rng.uniform(1_000.0, 500_000.0, n_ord), 2),
     })
-    # distinct microsecond timestamps so the (ts, event_id) order is total
-    ts = _EPOCH_US + rng.choice(_MONTH_US, size=n_events, replace=False)
+    # distinct microsecond timestamps, so the (ts, event_id) order is total
+    ts = _EPOCH_US + np.sort(rng.choice(_MONTH_US, size=n_events, replace=False))
     _write(out_dir, "events", {
-        "event_id": rng.permutation(n_events).astype(np.int64),
+        "event_id": np.arange(n_events, dtype=np.int64),
         "ts": pa.array(ts, type=pa.timestamp("us")),
         "user_id": rng.integers(n_users, size=n_events).astype(np.int64),
     })
-    texts = [
-        " ".join(_VOCAB[rng.integers(len(_VOCAB), size=int(k))])
-        for k in rng.integers(20, 60, size=n_docs)
-    ]
+    texts = _documents(rng, n_docs)
     _write(out_dir, "documents", {
         "doc_id": np.arange(n_docs, dtype=np.int64),
         "text": texts,
-        "lang": _LANGS[rng.integers(len(_LANGS), size=n_docs)],
+        "lang": _LANGS[rng.choice(len(_LANGS), size=n_docs, p=_LANG_SHARE / _LANG_SHARE.sum())],
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     })
     return {"customer": n_cust, "orders": n_ord, "events": n_events, "documents": n_docs}

@@ -1,19 +1,25 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload graph_iter_sf01 --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload graph_iter_sf01 --seed 1 --seconds 15 --trace 0
 
 One client in a closed loop: a single Python process issues the workload's
 queries one after another on ``local[<cores>]`` and writes each result to
 Spark's noop sink. After set-up (session start, seeded input generation
 repeated ``INPUT_REPEATS`` times, and a warmup pass whose collected outputs
 go through the correctness gate) timed passes run until ``--seconds`` is
-spent, at least one. The seed generates the input and permutes the query
-order of every pass.
+spent and at least ``MIN_PASSES`` have run. The seed generates the input and
+permutes the query order of every pass.
 
-``--trace 0`` reports the end-to-end metrics. ``--trace 1`` alternates
-untraced and traced passes and reports the per-layer metrics of the traced
-ones, the tracing overhead, and writes every span to
+``--trace 0`` reports the end-to-end metrics. ``--trace 1`` runs untraced
+and traced passes in ABBA-BAAB order (whole blocks of eight, at least one)
+and reports the per-layer metrics of the traced passes, the per-query times
+of the untraced ones, the tracing overhead (mean traced minus mean untraced
+``pass_s``), and writes every span to
 ``.perfbench_out/spans_<workload>_seed<seed>.json``.
+Metric names and units come from ``BENCHMARK.json``.
+
+``--sf-dir DIR`` reads the sf workload's tables from DIR instead of
+generating them, to compare the generated tables with a reference copy.
 
 The last stdout line is one JSON object with the keys ``correct``,
 ``attempted``, ``failed`` and ``metrics``; the lines above it (prefixed
@@ -40,14 +46,23 @@ sys.path.insert(0, ROOT)
 
 import tracing  # noqa: E402
 import workloads  # noqa: E402
+
+with open(os.path.join(ROOT, "BENCHMARK.json")) as _fh:
+    SPEC = json.load(_fh)
+
+#: input set-ups per run; ``setup.input_s`` is their median
 INPUT_REPEATS = 3
+#: fewest untraced timed passes in a run; ``pass_s`` is their median
+MIN_PASSES = 3
+#: pass kinds of one block in a traced run (True = traced): ABBA then
+#: BAAB, so a drift in pass time that is linear or quadratic in the pass
+#: index cancels out of the traced-minus-untraced mean
+ABBA_BAAB = (False, True, True, False, True, False, False, True)
 #: share of MemTotal given to the driver heap (local mode: executors too)
 HEAP_SHARE = 0.25
 #: status-store retention: far above the jobs/stages one run creates, so
 #: nothing of a query is evicted before it is read
 RETAINED = 100_000
-
-END_TO_END_UNITS = {"setup_s": "s", "pass_s": "s", "peak_rss_mb": "MB"}
 
 
 def host_cores() -> int:
@@ -167,7 +182,9 @@ class Runner:
             if self.prepared is not None:
                 self.prepared.close()
             t0 = time.perf_counter()
-            self.prepared = self.workload.prepare(self.spark, self.work_dir, self.size, self.args.seed)
+            self.prepared = self.workload.prepare(
+                self.spark, self.work_dir, self.size, self.args.seed, self.args.sf_dir
+            )
             input_times.append(time.perf_counter() - t0)
         self.setup["setup.input_s"] = statistics.median(input_times)
 
@@ -214,16 +231,23 @@ class Runner:
         self.status.drop_persistent_rdds()
 
     def run_pass(self, index: int, traced: bool) -> dict:
+        """One pass over the workload's queries. ``walls`` holds each
+        query's wall time; ``pass_s`` sums, per query, that wall time plus
+        the tracing's own work for the query (job group, spans, status
+        store reads), so traced minus untraced ``pass_s`` is the tracing
+        overhead."""
         sc = self.spark.sparkContext
         if traced:
             self.tracer.install()
         token = self.monitor.start()
         walls: dict[str, float] = {}
+        pass_s = 0.0
         traces: list[tracing.QueryTrace] = []
         try:
             for q in self._order():
                 self.attempted += 1
                 group = f"perfbench-{index}-{q}"
+                t_query = time.perf_counter()
                 if traced:
                     qt = tracing.QueryTrace(q)
                     self.tracer.current = qt
@@ -250,6 +274,7 @@ class Runner:
                     ]
                     traces.append(qt)
                     sc.setLocalProperty("spark.jobGroup.id", None)
+                pass_s += time.perf_counter() - t_query
                 self._clear_cache()
         finally:
             self.tracer.current = None
@@ -257,26 +282,22 @@ class Runner:
                 self.tracer.uninstall()
         load = self.monitor.finish(token)
         load["noisy"] = not self.bench._is_clean(load)
-        return {"traced": traced, "walls": walls, "pass_s": sum(walls.values()),
-                "load": load, "traces": traces}
+        return {"traced": traced, "walls": walls, "pass_s": pass_s,
+                "tracing_s": pass_s - sum(walls.values()), "load": load, "traces": traces}
 
     def timed_passes(self) -> list[dict]:
-        """Closed loop until ``--seconds`` is spent; with tracing, untraced
-        and traced passes alternate and at least one of each runs. When
-        every untraced pass so far was noisy and there is only one, one
-        more is taken."""
+        """Closed loop until ``--seconds`` is spent and at least
+        ``MIN_PASSES`` passes ran; with tracing, whole ABBA-BAAB blocks."""
         passes: list[dict] = []
+        block = ABBA_BAAB if self.args.trace else (False,)
         t0 = time.perf_counter()
         while True:
-            traced = bool(self.args.trace) and len(passes) % 2 == 1
+            traced = block[len(passes) % len(block)]
             passes.append(self.run_pass(len(passes), traced))
-            plain = [p for p in passes if not p["traced"]]
-            quiet = any(not p["load"]["noisy"] for p in plain)
-            need_traced = self.args.trace and len(plain) == len(passes)
             if (
-                not need_traced
-                and time.perf_counter() - t0 >= self.args.seconds
-                and (quiet or len(plain) > 1)
+                time.perf_counter() - t0 >= self.args.seconds
+                and len(passes) >= MIN_PASSES
+                and len(passes) % len(block) == 0
             ):
                 return passes
 
@@ -317,6 +338,18 @@ def layer_totals(traces) -> dict[str, float]:
     return totals
 
 
+def query_medians(passes: list[dict]) -> dict[str, float]:
+    """``query_s.<query>`` for every query of every workload: the median
+    wall time over the given passes, 0 for queries this workload does not
+    run."""
+    out = {}
+    for wl in workloads.WORKLOADS.values():
+        for q in wl.queries:
+            samples = [p["walls"][q] for p in passes if q in p["walls"]]
+            out[f"query_s.{q}"] = statistics.median(samples) if samples else 0.0
+    return out
+
+
 def per_layer_metrics(runner: Runner, passes: list[dict]) -> dict[str, float]:
     traced = [p for p in passes if p["traced"]]
     plain = [p for p in passes if not p["traced"]]
@@ -329,9 +362,13 @@ def per_layer_metrics(runner: Runner, passes: list[dict]) -> dict[str, float]:
     m["spark.stages_skipped_frac"] = stages / m["spark.stages"] if m["spark.stages"] else 0.0
     m.pop("query_s")
     m["trace.pass_s"] = traced_s
-    m["trace.overhead_s"] = traced_s - plain_s
-    m["driver.outside_job_frac"] = m["driver.outside_job_s"] / traced_s
-    m["spark.task_run_per_core_frac"] = m["spark.task_run_s"] / runner.cores / traced_s
+    m["trace.overhead_s"] = (statistics.fmean(p["pass_s"] for p in traced)
+                             - statistics.fmean(p["pass_s"] for p in plain))
+    # shares of the untraced pass, the end-to-end pass_s
+    m["driver.outside_job_frac"] = m["driver.outside_job_s"] / plain_s
+    m["spark.task_run_per_core_frac"] = m["spark.task_run_s"] / runner.cores / plain_s
+    m["ops_failed_frac"] = runner.failed / runner.attempted
+    m.update(query_medians(plain))
     m.update(runner.setup)
     return m
 
@@ -361,14 +398,9 @@ def write_spans(runner: Runner, passes: list[dict]) -> str:
     return path
 
 
-def unit_of(name: str) -> str:
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("_bytes"):
-        return "bytes"
-    if name.endswith(("_frac", "_ratio")):
-        return "ratio"
-    return "count"
+def declared(kind: str, values: dict[str, float]) -> dict[str, dict]:
+    """The ``BENCHMARK.json`` metrics of one kind, with their units."""
+    return {m["name"]: {"value": values[m["name"]], "unit": m["unit"]} for m in SPEC[kind]}
 
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
@@ -379,6 +411,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--tiny", action="store_true",
                    help="sf0.001 tables and a 2k-vertex graph (smoke tests)")
+    p.add_argument("--sf-dir",
+                   help="read the sf tables from this directory instead of generating them")
     return p.parse_args(argv)
 
 
@@ -390,6 +424,9 @@ def main(argv: list[str]) -> int:
     if args.workload not in workloads.WORKLOADS:
         print(f"unknown workload {args.workload!r}; one of {sorted(workloads.WORKLOADS)}",
               file=sys.stderr)
+        return 2
+    if args.sf_dir and not workloads.WORKLOADS[args.workload].reads_sf_tables:
+        print(f"--sf-dir applies to workloads on sf tables, not {args.workload}", file=sys.stderr)
         return 2
     runner = Runner(args)
     try:
@@ -413,7 +450,7 @@ def main(argv: list[str]) -> int:
     for i, p in enumerate(passes):
         flag = " NOISY" if p["load"]["noisy"] else ""
         print(f"# pass {i} {'traced' if p['traced'] else 'untraced'} {p['pass_s']:.4f} s "
-              f"load {json.dumps(p['load'])}{flag}")
+              f"(tracing {p['tracing_s']:.4f} s) load {json.dumps(p['load'])}{flag}")
     print(f"# ops_failed_frac {runner.failed / runner.attempted:.4f} "
           f"({runner.failed}/{runner.attempted})")
     for f in runner.failures:
@@ -426,14 +463,13 @@ def main(argv: list[str]) -> int:
                 layers = {k: round(v, 4) for k, v in qt.layer_metrics().items()}
                 print(f"# layers {qt.query} {json.dumps(layers)}")
         print(f"# spans written to {os.path.relpath(spans_path, ROOT)}")
-        result = {k: {"value": v, "unit": unit_of(k)} for k, v in sorted(metrics.items())}
+        result = declared("per_layer", metrics)
     else:
-        values = {
+        result = declared("end_to_end", {
             "setup_s": setup_s,
             "pass_s": _clean_median(plain, lambda p: p["pass_s"]),
             "peak_rss_mb": peak,
-        }
-        result = {k: {"value": v, "unit": END_TO_END_UNITS[k]} for k, v in values.items()}
+        })
     print(json.dumps({
         "correct": runner.failed == 0,
         "attempted": runner.attempted,

@@ -18,13 +18,14 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 import inputs
 import reference
 
 SF_TABLES = ("customer", "orders", "events", "documents")
-SKEWED_PR_ITERS = 5
+SKEWED_PR_ITERS = 2
 SKEWED_RESET = 0.15
 PR_RTOL = 1e-9
 
@@ -61,12 +62,19 @@ class SfTables(Prepared):
     compared with ``entry_oracles.oracle_sql()`` run in DuckDB, through
     the same canonicalisation as ``tools/check_oracles.py``."""
 
-    def __init__(self, spark: SparkSession, work_dir: str, size: Size, seed: int) -> None:
+    def __init__(
+        self, spark: SparkSession, work_dir: str, size: Size, seed: int, sf_dir: str | None = None
+    ) -> None:
         import __spark_entry__ as entry
 
         self._spark = spark
-        self._dir = os.path.join(work_dir, "sf")
-        self.size = inputs.write_tpch_tables(self._dir, size.sf, seed)
+        if sf_dir:
+            self._dir = os.path.abspath(sf_dir)
+            self.size = {t: pq.ParquetFile(f"{self._dir}/{t}.parquet").metadata.num_rows
+                         for t in SF_TABLES}
+        else:
+            self._dir = os.path.join(work_dir, "sf")
+            self.size = inputs.write_tpch_tables(self._dir, size.sf, seed)
         self._queries = entry.queries()
         self._con = None
 
@@ -108,7 +116,9 @@ class SfTables(Prepared):
 class SkewedGraph(Prepared):
     """The hub-skewed synthetic graph, read back from parquet by Spark."""
 
-    def __init__(self, spark: SparkSession, work_dir: str, size: Size, seed: int) -> None:
+    def __init__(
+        self, spark: SparkSession, work_dir: str, size: Size, seed: int, sf_dir: None = None
+    ) -> None:
         from graphframes_spark import GraphFrame
 
         self._n = size.graph_vertices
@@ -144,7 +154,11 @@ class SkewedGraph(Prepared):
 class Workload:
     name: str
     queries: tuple[str, ...]
-    prepare: Callable[[SparkSession, str, Size, int], Prepared]
+    prepare: Callable[[SparkSession, str, Size, int, str | None], Prepared]
+
+    @property
+    def reads_sf_tables(self) -> bool:
+        return self.prepare is SfTables
 
 
 WORKLOADS = {
