@@ -147,12 +147,6 @@ class IterationHarness:
         self._current.append(df)
         return df
 
-    def track(self, df: DataFrame) -> DataFrame:
-        """Register an externally persisted/checkpointed frame so
-        :meth:`finish` unpersists it during cleanup."""
-        self._current.append(df)
-        return df
-
     def checkpoint(self, df: DataFrame, eager: bool = False) -> DataFrame:
         if self.use_local_checkpoints:
             return df.localCheckpoint(eager=eager)

@@ -2,8 +2,8 @@
 
 Semantics follow the reference
 (/root/reference/core/src/main/scala/org/graphframes/lib/BFS.scala:83-231):
-grow a path-join one hop at a time, probing each hop with ``take(1)`` for
-a match of the target expression; return the first (shortest) hop's full
+grow a path-join one hop at a time, probing each hop for a match of the
+target expression; return the first (shortest) hop's full
 paths with columns ``from, e0, v1, e1, ..., to`` (each a struct). Paths
 are non-backtracking (no vertex repeated within a path).
 
@@ -20,7 +20,7 @@ from typing import TYPE_CHECKING, Optional, Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphframes_spark.util import DST, ID, SRC, nest_as_col
+from graphframes_spark.util import ID, nest_as_col
 
 if TYPE_CHECKING:
     from graphframes_spark.graphframe import GraphFrame
@@ -33,35 +33,26 @@ def bfs(
     edge_filter: Optional[Union[str, Column]] = None,
     max_path_length: int = 10,
 ) -> DataFrame:
-    from graphframes_spark.harness import get_conf
+    from pyspark.sql import Observation
 
-    spark = graph.spark
+    from graphframes_spark.pregel import _observed_count
+
     v = graph.vertices
-    # round-12 action folding (guide §1.4): "fold" (default) answers the
-    # three seed probes in ONE aggregate pass and rides each hop's target
-    # probe on the checkpoint's materialization job via Observation;
-    # "take" keeps the legacy per-probe take(1) actions (ablation arm).
-    fold = get_conf(spark, "bfs.probe", "fold") != "take"
-
     from_df = v.filter(from_expr)
     to_df = v.filter(to_expr)
-    if fold:
-        from_col = F.expr(from_expr) if isinstance(from_expr, str) else from_expr
-        to_col = F.expr(to_expr) if isinstance(to_expr, str) else to_expr
-        seed = v.select(
-            F.count_if(from_col).alias("_nf"),
-            F.count_if(to_col).alias("_nt"),
-            F.count_if(from_col & to_col).alias("_nb"),
-        ).first()
-        if not seed or not seed["_nf"] or not seed["_nt"]:
-            return v.limit(0)
-        both = bool(seed["_nb"])
-    else:
-        if not from_df.take(1) or not to_df.take(1):
-            return v.limit(0)
-        both = bool(from_df.filter(to_expr).take(1))
+    # the three seed probes (any from, any to, any vertex matching both)
+    # are answered by ONE aggregate pass
+    from_col = F.expr(from_expr) if isinstance(from_expr, str) else from_expr
+    to_col = F.expr(to_expr) if isinstance(to_expr, str) else to_expr
+    seed = v.select(
+        F.count_if(from_col).alias("_nf"),
+        F.count_if(to_col).alias("_nt"),
+        F.count_if(from_col & to_col).alias("_nb"),
+    ).first()
+    if not seed or not seed["_nf"] or not seed["_nt"]:
+        return v.limit(0)
 
-    if both:
+    if seed["_nb"]:
         from_equals_to = from_df.filter(to_expr)
         return from_equals_to.select(
             nest_as_col(from_equals_to, "from"), nest_as_col(from_equals_to, "to")
@@ -104,45 +95,27 @@ def bfs(
                 check = check & (joined[f"v{i}"][ID] != joined[next_vertex][ID])
             paths = joined.filter(check)
 
-        if fold:
-            # ONE action per hop: the target-set membership is attached as
-            # a flag via a left-outer join (vertex ids are unique, so row
-            # counts are untouched) and counted by an Observation riding
-            # the eager checkpoint's materialization job — the legacy
-            # separate take(1) probe re-executed the frontier pipeline
-            # once per hop.
-            from pyspark.sql import Observation
-
-            from graphframes_spark.pregel import _observed_count
-
-            obs = Observation()
-            tagged = (
-                paths.join(
-                    to_ids.withColumn("_bfs_hit", F.lit(1)),
-                    paths[next_vertex][ID] == F.col("_to_id"),
-                    "left_outer",
-                )
-                .drop("_to_id")
-                .observe(obs, F.count(F.col("_bfs_hit")).alias("hits"))
+        # ONE action per hop: the target-set membership is attached as a
+        # flag via a left-outer join (vertex ids are unique, so row counts
+        # are untouched) and counted by an Observation riding the eager
+        # checkpoint's materialization job
+        obs = Observation()
+        tagged = (
+            paths.join(
+                to_ids.withColumn("_bfs_hit", F.lit(1)),
+                paths[next_vertex][ID] == F.col("_to_id"),
+                "left_outer",
             )
-            tagged = tagged.localCheckpoint(eager=True)
-            if _observed_count(obs, "hits") > 0:
-                found = tagged.filter(F.col("_bfs_hit").isNotNull()).drop(
-                    "_bfs_hit"
-                ).withColumnRenamed(next_vertex, "to")
-                break
-            paths = tagged.drop("_bfs_hit")
-            continue
-
-        # legacy per-hop shape: checkpoint, then a separate take(1) probe
-        paths = paths.localCheckpoint(eager=True)
-
-        candidate = paths.join(
-            to_ids, paths[next_vertex][ID] == F.col("_to_id"), "left_semi"
+            .drop("_to_id")
+            .observe(obs, F.count(F.col("_bfs_hit")).alias("hits"))
         )
-        if candidate.take(1):
-            found = candidate.withColumnRenamed(next_vertex, "to")
+        tagged = tagged.localCheckpoint(eager=True)
+        if _observed_count(obs, "hits") > 0:
+            found = tagged.filter(F.col("_bfs_hit").isNotNull()).drop(
+                "_bfs_hit"
+            ).withColumnRenamed(next_vertex, "to")
             break
+        paths = tagged.drop("_bfs_hit")
 
     if found is None:
         return v.limit(0)

@@ -16,13 +16,13 @@ hash aggregate and hub vertices cannot blow up executor memory.
 
 Iteration t computes ``B_t(v) = {v} ∪ ⋃_{(v,w)∈E} B_{t-1}(w)`` —
 entirely with Spark's built-in datasketches HLL expressions
-(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_union`` /
-``hll_sketch_estimate``), JVM-side, no UDFs:
+(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``),
+JVM-side, no UDFs:
 
-1. neighbor union: edges ⋈ state on dst, ``hll_union_agg`` by src —
-   ONE shuffle whose per-group state is the fixed-size sketch;
-2. self union: vertex-keyed left join + pairwise ``hll_union``;
-3. per-round ``localCheckpoint`` (the state feeds both next-round
+1. neighbor and self union: edges plus one (v, v) self-loop per vertex
+   ⋈ state on dst, ``hll_union_agg`` by src — ONE shuffle whose
+   per-group state is the fixed-size sketch;
+2. per-round ``localCheckpoint`` (the state feeds both next-round
    consumers), with the convergence probe (sum of estimates is
    monotone non-decreasing and strictly grows until every ball is
    complete) riding the checkpoint via ``Observation`` — zero extra
@@ -70,11 +70,9 @@ def hyperball(
 
     Precondition: every edge endpoint must appear in ``graph.vertices``
     (the standard GraphFrame integrity contract — check with
-    ``validate()``). The default self-loop delivery keys per-hop state
-    on edge src values, so an src id absent from the vertex table would
-    get a row (with a ball missing itself) where the legacy shape
-    (``spark.graphframes_spark.hyperball.impl=legacy``) drops it; with
-    the precondition held, both shapes are identical.
+    ``validate()``). Per-hop state is keyed on edge src values, so an
+    src id absent from the vertex table would get a row of its own, with
+    a ball missing itself.
 
     State checkpointing follows the engine-wide policy: local
     checkpoints by default, reliable checkpoints (executor-readable
@@ -89,22 +87,16 @@ def hyperball(
         )
     from pyspark.sql import Observation
 
-    from graphframes_spark.harness import IterationHarness, get_conf
+    from graphframes_spark.harness import IterationHarness
 
     # checkpoint-policy holder only (interval 1: every hop's state is both
     # the probe carrier and a two-consumer input, so it always materializes)
     harness = IterationHarness(graph.spark, checkpoint_interval=1)
 
-    # ``selfloop`` (default, round 11): the self-union B_t(v) ⊇ B_{t-1}(v)
-    # is delivered through an appended (v, v) self-loop edge, so each hop
-    # is ONE join + ONE sketch-merging aggregate — the legacy shape's
-    # separate vertex-keyed left join + pairwise hll_union is gone (one
-    # fewer shuffle join per hop). HLL union is order- and
-    # duplicate-insensitive (coupon mode: a hash set; dense mode: per-
-    # register max), so the estimates are identical either way; the
-    # legacy shape stays selectable as the A/B ablation baseline via
-    # spark.graphframes_spark.hyperball.impl=legacy.
-    self_loop = get_conf(graph.spark, "hyperball.impl", "selfloop") != "legacy"
+    # the self-union B_t(v) ⊇ B_{t-1}(v) is delivered through an appended
+    # (v, v) self-loop edge, so each hop is ONE join + ONE sketch-merging
+    # aggregate (HLL union is order- and duplicate-insensitive: coupon
+    # mode is a hash set, dense mode a per-register max)
     edges = graph.edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST))
     if not is_directed:
         edges = edges.unionByName(
@@ -112,13 +104,9 @@ def hyperball(
                 F.col(DST).alias(SRC), F.col(SRC).alias(DST)
             ).filter(F.col(SRC) != F.col(DST))
         )
-    edges = edges.distinct()
-    if self_loop:
-        edges = edges.unionByName(
-            graph.vertices.select(
-                F.col(ID).alias(SRC), F.col(ID).alias(DST)
-            )
-        )
+    edges = edges.distinct().unionByName(
+        graph.vertices.select(F.col(ID).alias(SRC), F.col(ID).alias(DST))
+    )
     edges = harness.checkpoint(edges, eager=True)
 
     # B_0 = {v}: one trivial group per vertex builds the singleton sketch.
@@ -146,32 +134,12 @@ def hyperball(
             .agg(F.hll_union_agg(F.col("_nsk")).alias("_nsk"))
         )
         obs = Observation()
-        if self_loop:
-            # the (v, v) self-loop already merged B_{t-1}(v) into the
-            # aggregate, and it guarantees one group per vertex
-            state = (
-                nbr.select(ID, F.col("_nsk").alias("_sk"))
-                .observe(
-                    obs,
-                    F.sum(F.hll_sketch_estimate(F.col("_sk"))).alias("_total"),
-                )
-            )
-            state = harness.checkpoint(state, eager=True)
-        else:
-            state = (
-                state.join(nbr, on=ID, how="left")
-                .select(
-                    ID,
-                    F.when(F.col("_nsk").isNull(), F.col("_sk"))
-                    .otherwise(F.hll_union(F.col("_sk"), F.col("_nsk")))
-                    .alias("_sk"),
-                )
-                .observe(
-                    obs,
-                    F.sum(F.hll_sketch_estimate(F.col("_sk"))).alias("_total"),
-                )
-            )
-            state = harness.checkpoint(state, eager=True)
+        # the (v, v) self-loop already merged B_{t-1}(v) into the
+        # aggregate, and it guarantees one group per vertex
+        state = nbr.select(ID, F.col("_nsk").alias("_sk")).observe(
+            obs, F.sum(F.hll_sketch_estimate(F.col("_sk"))).alias("_total")
+        )
+        state = harness.checkpoint(state, eager=True)
         total = obs.get.get("_total", 0)
         levels.append(
             state.select(

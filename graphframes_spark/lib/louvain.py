@@ -31,10 +31,9 @@ is one adjacency⋈assignment join whose edge side is persisted
 PRE-PARTITIONED on the join key (the exchange survives the cache, so
 only the vertex-sized state reshuffles per round), one (vertex,
 candidate-community) aggregation, a Σ_tot hash aggregate of the state,
-and one community-keyed join; the legacy candidate-injection
-re-aggregate and per-round k⋈assignment Σ_tot join are gone (the stay
-option is resolved inside the decide aggregate, with a closed-form
-fallback when a vertex's own community is absent from its neighbors).
+and one community-keyed join (the stay option is resolved inside the
+decide aggregate, with a closed-form fallback when a vertex's own
+community is absent from its neighbors).
 Each pass shrinks the graph, so later passes are near-free. State is
 local-checkpointed per round to keep lineage flat — the per-round state
 is referenced three times per round, so lazy lineage would grow the
@@ -101,24 +100,19 @@ def _local_moving(
     Returns (assignment DF[id, community], rounds_with_moves). Community
     ids are vertex ids (each vertex starts in its own singleton).
 
-    Decision-identical to :func:`_local_moving_legacy` (same gains, same
-    stay-on-tie/min-id tie-breaks, same alternating direction gate — the
-    DuckDB oracle replays that contract bit-exactly) but restructured for
-    two fewer shuffles per round and a smaller working set:
+    Decisions follow the contract the DuckDB oracle replays bit-exactly
+    (same gains, stay-on-tie/min-id tie-breaks, alternating direction
+    gate); the plan keeps the working set small:
 
-    - **No candidate-injection re-aggregate.** The legacy plan unioned an
-      explicit own-community row into the neighbor-community aggregate and
-      re-grouped (a second candidate-sized shuffle) purely so the stay
-      option was a candidate row. Here the stay gain is computed directly:
-      the per-u aggregation keeps ``max(gain) where c == own`` alongside
-      the best move candidate, and vertices whose own community is absent
-      from their neighbors fall back to the closed form
-      ``0 − k_u·(tot_own − k_u)/2m`` (exactly the k_uc=0 row the legacy
-      union injected). Move-vs-stay then compares strictly (ties stay),
-      preserving the legacy ``(−gain, stay-bit, c)`` struct-min order.
+    - **Stay gain without a candidate row.** The per-u aggregation keeps
+      ``max(gain) where c == own`` alongside the best move candidate, and
+      vertices whose own community is absent from their neighbors fall
+      back to the closed form ``0 − k_u·(tot_own − k_u)/2m`` (the k_uc=0
+      stay row). Move-vs-stay then compares strictly (ties stay), which is
+      the ``(−gain, stay-bit, c)`` struct-min order.
     - **No per-round vertex-sized k⋈assignment join for Σ_tot.** The loop
       state carries ``k`` alongside the community (DF[id, community, k],
-      one checkpoint per round as before), so sigma is a single map-side
+      one checkpoint per round), so sigma is a single map-side
       partial-aggregatable hash aggregate of the checkpointed state — and
       both of its consumers shuffle it on the same key, so the exchange is
       planned once and reused.
@@ -128,8 +122,7 @@ def _local_moving(
       never a neighbor community). It never appears in the per-round
       aggregate (which is driven by the adjacency), so from round 2 on
       the loop state is naturally the edge-incident vertices only; the
-      stationary rest is recovered with one anti-join at the end instead
-      of riding every round's joins as in the legacy plan.
+      stationary rest is recovered with one anti-join at the end.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -191,7 +184,7 @@ def _local_moving(
             .groupBy("u", "c")
             .agg(F.sum("w").alias("k_uc"))
         )
-        # the gain expression mirrors the legacy/oracle operation order
+        # the gain expression mirrors the oracle operation order
         # exactly: k_uc − k_u·(tot − [c==own]·k_u)/2m, one multiply, one
         # divide — bit-identical decisions on integer-valued doubles
         scored = (
@@ -235,7 +228,7 @@ def _local_moving(
         )
         # oscillation guard (Sotera DGA rule), applied to the single best
         # move candidate — a gate-blocked best move falls back to stay,
-        # never to the runner-up (legacy/oracle semantics)
+        # never to the runner-up (oracle semantics)
         if rnd % 2 == 0:
             allowed = F.col("bm").getField("c") < F.col("own")
         else:
@@ -268,129 +261,6 @@ def _local_moving(
         loop_asg.select(ID), on=ID, how="left_anti"
     ).select(F.col(ID), F.col(ID).alias(COMMUNITY))
     return loop_asg.unionByName(stationary), moves_happened
-
-
-def _local_moving_legacy(
-    cedges: DataFrame,
-    vertices: DataFrame,
-    m: float,
-    max_rounds: int,
-) -> tuple[DataFrame, int]:
-    """Round-10 local-moving plan, retained as the measured A/B ablation
-    baseline for the round-11 restructure (select with
-    ``spark.graphframes_spark.louvain.impl=legacy``). Decision-identical
-    to :func:`_local_moving`; costs one candidate-sized re-aggregate and
-    one vertex-sized Σ_tot join more per round.
-    """
-    two_m = 2.0 * m
-    # complete over ALL vertices (zero-degree fill): the inner joins
-    # below must not drop isolated vertices from the assignment
-    k = (
-        vertices.select(ID)
-        .join(_weighted_degrees(cedges), on=ID, how="left")
-        .select(ID, F.coalesce(F.col("k"), F.lit(0.0)).alias("k"))
-        .localCheckpoint(eager=True)
-    )
-    # adjacency without self-loops, both orientations — k_{i,c} sums
-    # links to *other* members only
-    adj = (
-        cedges.filter(F.col("a") != F.col("b"))
-        .select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
-        .unionByName(
-            cedges.filter(F.col("a") != F.col("b")).select(
-                F.col("b").alias("u"), F.col("a").alias("v"), "w"
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    asg = vertices.select(F.col(ID), F.col(ID).alias(COMMUNITY))
-    moves_happened = 0
-    for rnd in range(max_rounds):
-        # neighbor-community attachment k_{u,c}
-        nbr_comm = (
-            adj.join(
-                asg.select(
-                    F.col(ID).alias("v"), F.col(COMMUNITY).alias("c")
-                ),
-                on="v",
-            )
-            .groupBy("u", "c")
-            .agg(F.sum("w").alias("k_uc"))
-        )
-        # candidate set = neighbor communities ∪ own (own may be absent
-        # from nbr_comm when no neighbor shares it -> k_uc = 0)
-        own = asg.select(
-            F.col(ID).alias("u"), F.col(COMMUNITY).alias("c"), F.lit(0.0).alias("k_uc")
-        )
-        cands = nbr_comm.unionByName(own).groupBy("u", "c").agg(
-            F.max("k_uc").alias("k_uc")
-        )
-        sigma = (
-            k.join(asg, on=ID)
-            .groupBy(COMMUNITY)
-            .agg(F.sum("k").alias("tot"))
-            .withColumnRenamed(COMMUNITY, "c")
-        )
-        ku = k.select(F.col(ID).alias("u"), F.col("k").alias("k_u"))
-        own_c = asg.select(F.col(ID).alias("u"), F.col(COMMUNITY).alias("own"))
-        scored = (
-            cands.join(sigma, on="c")
-            .join(ku, on="u")
-            .join(own_c, on="u")
-            .withColumn(
-                "tot_excl",
-                F.col("tot")
-                - F.when(F.col("c") == F.col("own"), F.col("k_u")).otherwise(
-                    F.lit(0.0)
-                ),
-            )
-            .withColumn(
-                "gain",
-                F.col("k_uc") - F.col("k_u") * F.col("tot_excl") / F.lit(two_m),
-            )
-        )
-        # argmax gain with ties broken toward staying put (kills
-        # zero-gain label drift), then toward the smallest community id
-        best = scored.groupBy("u", "own").agg(
-            F.min(
-                F.struct(
-                    (-F.col("gain")).alias("ng"),
-                    (F.col("c") != F.col("own")).cast("int").alias("mv"),
-                    F.col("c").alias("c"),
-                )
-            ).alias("_best")
-        )
-        # oscillation guard (Sotera DGA rule): even rounds only allow
-        # moves to a LOWER community id, odd rounds to a HIGHER one — a
-        # pair of vertices that would swap communities is split across
-        # rounds and settles after the first one-sided move
-        if rnd % 2 == 0:
-            allowed = F.col("_best.c") < F.col("own")
-        else:
-            allowed = F.col("_best.c") > F.col("own")
-        new_comm = F.when(
-            allowed & (F.col("_best.c") != F.col("own")), F.col("_best.c")
-        ).otherwise(F.col("own"))
-        decided = best.select(
-            F.col("u").alias(ID),
-            new_comm.alias(COMMUNITY),
-            (new_comm != F.col("own")).alias("_moved"),
-        )
-        # piggyback the mover count on the checkpoint materialization —
-        # one action per round, not two (same trick as pregel.py's
-        # Observation-folded probes)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        decided = decided.observe(obs, F.count_if(F.col("_moved")).alias("n"))
-        decided = decided.localCheckpoint(eager=True)
-        moved = obs.get.get("n", 0)
-        asg = decided.drop("_moved")
-        if moved == 0:
-            break
-        moves_happened += 1
-    return asg, moves_happened
 
 
 def contract(
@@ -471,11 +341,6 @@ def louvain(
     if weight_col is not None and weight_col not in graph.edges.columns:
         raise GraphFramesError(f"edges have no weight column {weight_col!r}")
 
-    from graphframes_spark.harness import get_conf
-
-    impl = get_conf(graph.spark, "louvain.impl", "v11")
-    local_moving = _local_moving_legacy if impl == "legacy" else _local_moving
-
     cedges = _canonical_edges(graph, weight_col).localCheckpoint(eager=True)
     m = cedges.agg(F.sum("w")).collect()[0][0]
     vertices = graph.vertices.select(ID)
@@ -488,7 +353,7 @@ def louvain(
     level_vertices = vertices
     level_count = None  # lazily counted; carried across passes
     for _ in range(max_passes):
-        asg, moves = local_moving(
+        asg, moves = _local_moving(
             cedges, level_vertices, m, max_rounds_per_pass
         )
         total = (

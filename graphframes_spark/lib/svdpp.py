@@ -162,45 +162,23 @@ def svd_plus_plus(
         )
         return edges.join(src_state, on=SRC).join(dst_state, on=DST)
 
-    # Phase 1 only aggregates dst-side implicit factors by src, so the
-    # src-state join in the full triplet build adds no columns and
-    # filters nothing (every edge endpoint has a t0 state row by
-    # construction) — the narrow path drops that one shuffle join per
-    # iteration. Catalyst cannot remove it itself: inner joins are
-    # never join-eliminated because they could change cardinality.
-    # ``triplet`` keeps the legacy full-triplet build as the A/B
-    # ablation baseline (spark.graphframes_spark.svdpp.phase1).
-    from graphframes_spark.harness import get_conf
-
-    phase1_narrow = get_conf(spark, "svdpp.phase1", "narrow") != "triplet"
-    # The phase-1 state is persisted LAZILY and then scanned by three
-    # subtrees of the one phase-2 action (src_state, dst_state, and the
-    # outer join-back) — concurrent stages race to populate the cache,
-    # the same block-lock pathology the round-11 HITS fix removed
-    # (sporadic 3-5x outliers in BOTH arms of BENCH_svdpp_ab_r11).
-    # "eager" folds one cheap count() in right after the persist so
-    # phase 2 reads a fully-populated cache.
-    phase1_eager = get_conf(spark, "svdpp.phase1Materialize", "eager") != "lazy"
-
     for _ in harness.iterations(max_iter):
-        # Phase 1: usr.column2 = p + norm * sum(y_j over rated items)
-        if phase1_narrow:
-            t1 = (
-                edges.join(
-                    state.select(F.col(ID).alias(DST), F.col(COLUMN2).alias("y")),
-                    on=DST,
-                )
-                .select(F.col(SRC).alias(ID), F.col("y"))
-                .groupBy(ID)
-                .agg(_sum_array("y", rank))
+        # Phase 1: usr.column2 = p + norm * sum(y_j over rated items).
+        # It only aggregates dst-side implicit factors by src, so it joins
+        # the dst state alone: a src-state join would add no columns and
+        # filter nothing (every edge endpoint has a t0 state row by
+        # construction). Catalyst cannot drop such a join itself: inner
+        # joins are never join-eliminated because they could change
+        # cardinality.
+        t1 = (
+            edges.join(
+                state.select(F.col(ID).alias(DST), F.col(COLUMN2).alias("y")),
+                on=DST,
             )
-        else:
-            t1 = (
-                join_triplets(state)
-                .select(F.col(SRC).alias(ID), F.col("y"))
-                .groupBy(ID)
-                .agg(_sum_array("y", rank))
-            )
+            .select(F.col(SRC).alias(ID), F.col("y"))
+            .groupBy(ID)
+            .agg(_sum_array("y", rank))
+        )
         state = harness.persist(
             state.join(t1, on=ID, how="left").select(
                 F.col(ID),
@@ -212,8 +190,11 @@ def svd_plus_plus(
                 F.col(COLUMN4),
             )
         )
-        if phase1_eager:
-            state.count()
+        # phase 2's one action scans this state from three subtrees
+        # (src_state, dst_state, the outer join-back); left lazy, their
+        # concurrent stages race to populate the cache (sporadic 3-5x
+        # outliers, BENCH_svdpp_ab_r11), so materialize it here
+        state.count()
 
         # Phase 2: per-edge error gradient, summed per vertex
         pred = F.lit(u) + F.col("bu") + F.col("bi") + _dot(F.col("q"), F.col("usr2"))

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from graphframes_spark.harness import IterationHarness, get_conf
+from graphframes_spark.harness import IterationHarness
 from graphframes_spark.util import DST, EDGE, ID, SRC, GraphFramesError
 
 if TYPE_CHECKING:
@@ -67,7 +67,6 @@ class Pregel:
         self._agg_msgs_col: Optional[Column] = None
         self._max_iter = 10
         self._checkpoint_interval = 2
-        self._stop_check_interval: Optional[int] = None
         self._early_stopping = False
         self._stop_if_all_non_active = False
         self._skip_messages_from_non_active = False
@@ -88,42 +87,6 @@ class Pregel:
 
     def setCheckpointInterval(self, value: int) -> "Pregel":
         self._checkpoint_interval = value
-        return self
-
-    def setStopCheckInterval(self, value: int) -> "Pregel":
-        """Probe the stopping condition every ``value`` supersteps instead
-        of every superstep (voting mode only; ignored in pure maxIter
-        runs, which have no per-superstep probes to begin with).
-
-        Within a probe window the supersteps are built lazily on persisted
-        (not materialized) state, so the whole window executes as ONE job
-        whose Observation metrics carry every superstep's message/active
-        counts — K× fewer actions and one Catalyst planning pass per
-        window instead of per superstep. The early-stop contract is exact,
-        not approximate: each superstep's pre-update state stays persisted
-        until its window's probe resolves, so a mid-window stop returns
-        the very frame the per-superstep protocol would have returned.
-        Cost: up to ``value - 1`` post-convergence supersteps are computed
-        before the probe sees the stop (cheap: their message streams are
-        empty), and up to ``value`` vertex-state frames are cached at
-        once. Unset -> conf ``spark.graphframes_spark.pregel.stopCheckInterval``.
-
-        **Measured REJECTED as a default at sf0.1** (round 12,
-        BENCH_pregel_window_ab_r12.json): scc W=2 −70%, W=3 −122%,
-        cycles W=3 −124% median vs W=1 on interleaved quiet pairs. Root
-        cause is structural, not weather: the in-window persisted frames
-        execute their cached plans WITHOUT AQE
-        (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-        defaults to false), losing the runtime SMJ→broadcast conversion
-        and partition coalescing the shrinking-frontier voting algorithms
-        live on — re-probed with that conf flipped, scc W=3 recovers to
-        −30%, still a loss. The default therefore stays 1 (the legacy
-        per-superstep probe path, byte-identical); the windowed mode
-        remains selectable for environments where per-action overhead
-        dominates (e.g. high-latency schedulers), with result equivalence
-        pinned in tests.
-        """
-        self._stop_check_interval = value
         return self
 
     def setEarlyStopping(self, value: bool) -> "Pregel":
@@ -415,37 +378,12 @@ class Pregel:
                     f"vertex column name {reserved!r} is reserved by Pregel"
                 )
 
-        # Voting-mode probe cadence (see setStopCheckInterval): with a
-        # window W > 1, supersteps inside a window persist lazily (no
-        # action) and the window-end probe's eager checkpoint is the ONE
-        # action — it populates each intermediate superstep's cache
-        # exactly once and its completion collects every riding
-        # Observation, from which the per-superstep stop protocol is
-        # replayed. W == 1 keeps the legacy per-superstep commit path.
-        if self._stop_check_interval is not None:
-            stop_every = self._stop_check_interval
-        else:
-            try:
-                stop_every = int(get_conf(spark, "pregel.stopCheckInterval", "1"))
-            except (TypeError, ValueError):
-                stop_every = 1
-        stop_every = max(stop_every, 1)
-        windowed = use_obs and stop_every > 1
-
-        if windowed:
-            current = current.persist(self._storage_level)
-        #: frames[0] = state before the window's first superstep; then one
-        #: entry per in-window superstep (its post-update state)
-        window_frames: list[DataFrame] = [current]
-        window_obs: list[tuple] = []
-
         LAST_RUN_SUPERSTEP_SECONDS.clear()
         import time as _time
 
-        stopped = False
-        for iteration in harness.iterations(self._max_iter):
+        for _ in harness.iterations(self._max_iter):
             _superstep_start = _time.perf_counter()
-            if not fused and not windowed:
+            if not fused:
                 current = harness.persist(current)
             previous = current
 
@@ -548,50 +486,6 @@ class Pregel:
                     F.count_if(F.col(ACTIVE_FLAG_COL)).alias("active_cnt"),
                 )
 
-            if windowed:
-                window_obs.append((obs, active_obs))
-                if iteration % stop_every != 0 and iteration < self._max_iter:
-                    # in-window superstep: persist lazily, no action
-                    current = current.persist(self._storage_level)
-                    window_frames.append(current)
-                    LAST_RUN_SUPERSTEP_SECONDS.append(
-                        _time.perf_counter() - _superstep_start
-                    )
-                    continue
-                # window-end probe: the eager checkpoint is the window's
-                # one action; replay the stop protocol from the collected
-                # per-superstep Observations in superstep order.
-                current = harness.checkpoint(current, eager=True)
-                window_frames.append(current)
-                for s, (o, ao) in enumerate(window_obs):
-                    if (
-                        self._early_stopping
-                        and o is not None
-                        and _observed_count(o, "msg_cnt") == 0
-                    ):
-                        # Reference semantics (Pregel.scala:494-502): stop
-                        # *before* applying an update for a message-less
-                        # round — return the state that superstep started
-                        # from (still persisted; exact, not approximate).
-                        current = window_frames[s]
-                        stopped = True
-                        break
-                    if ao is not None and _observed_count(ao, "active_cnt") == 0:
-                        current = window_frames[s + 1]
-                        stopped = True
-                        break
-                for f in window_frames:
-                    if f is not current:
-                        f.unpersist()
-                window_frames = [current]
-                window_obs = []
-                LAST_RUN_SUPERSTEP_SECONDS.append(
-                    _time.perf_counter() - _superstep_start
-                )
-                if stopped:
-                    break
-                continue
-
             # Checkpoint rounds always materialize (harness.commit eager
             # policy — lazy checkpoints measured 1.4-3x slower, see its
             # docstring); non-checkpoint rounds run no action in pure
@@ -615,9 +509,5 @@ class Pregel:
             if active_obs is not None and _observed_count(active_obs, "active_cnt") == 0:
                 break
 
-        if windowed:
-            # hand the surviving frame to the harness so finish() releases
-            # its cache after the result is materialized from it
-            harness.track(current)
         result = current.drop(ACTIVE_FLAG_COL)
         return harness.finish(result)

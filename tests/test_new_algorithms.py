@@ -972,28 +972,20 @@ def test_louvain_weighted_overrides_topology(spark):
     assert got[1] == got[2]
 
 
-def test_louvain_v11_plan_matches_legacy(spark):
-    """The round-11 local-moving restructure is decision-identical to the
-    retained legacy plan (same gains, tie-breaks, direction gates): both
-    impls must produce the same assignment on a graph with isolated
-    vertices, self-loops, float weights, and a bridge."""
+def test_louvain_weighted_mixed_graph_pinned(spark):
+    """Pinned assignment on a graph with isolated vertices, self-loops,
+    float weights, and a bridge (the local-moving gains, stay-on-tie and
+    min-id tie-breaks, and alternating direction gates all decide it)."""
     v = spark.createDataFrame([(i,) for i in range(10)], ["id"])
     e = spark.createDataFrame(
         [(0, 1, 1.0), (1, 2, 2.0), (0, 2, 1.5), (3, 4, 1.0), (4, 5, 1.0),
          (3, 5, 2.0), (2, 3, 0.5), (6, 6, 3.0), (7, 8, 1.0)],
         ["src", "dst", "weight"],
     )  # vertex 9 isolated, vertex 6 self-loop only
-    g = GraphFrame(v, e)
-    key = "spark.graphframes_spark.louvain.impl"
-    try:
-        spark.conf.set(key, "v11")
-        new = sorted(map(tuple, g.louvain(weightCol="weight").collect()))
-        spark.conf.set(key, "legacy")
-        old = sorted(map(tuple, g.louvain(weightCol="weight").collect()))
-    finally:
-        spark.conf.unset(key)
-    assert new == old
-    got = dict(new)
+    got = dict(
+        map(tuple, GraphFrame(v, e).louvain(weightCol="weight").collect())
+    )
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3, 6: 6, 7: 7, 8: 7, 9: 9}
     assert got[9] == 9 and got[6] == 6  # stationary vertices keep their id
 
 
@@ -1711,33 +1703,55 @@ def test_hyperball_edge_free_and_validation(spark):
         GraphFrame(v, e).hyperBall(lgConfigK=3)
 
 
-def test_hyperball_selfloop_matches_legacy(spark):
-    """The round-11 self-loop shape (self-union delivered through an
-    appended (v, v) edge, removing the per-hop vertex-keyed left join)
-    must reproduce the legacy join shape's estimates exactly — HLL union
-    is order- and duplicate-insensitive, so every (id, hops, reach) row
-    and the early-exit hop must match."""
+def test_hyperball_chain_star_isolated_pinned(spark):
+    """Pinned (id, hops, reach) rows, directed and undirected, on a chain
+    + star + isolated vertices: exact in the coupon regime, and the
+    early exit lands on the same hop (8) in both directions."""
     v = spark.range(0, 12).select("id")
     chain = spark.createDataFrame([(i, i + 1) for i in range(7)], ["src", "dst"])
     star = spark.createDataFrame([(11, d) for d in range(8, 11)], ["src", "dst"])
-    e = chain.unionByName(star)  # chain + star + isolated vertices
-    g = GraphFrame(v, e)
-    key = "spark.graphframes_spark.hyperball.impl"
-    try:
-        spark.conf.set(key, "selfloop")
-        new_d = sorted(map(tuple, g.hyperBall(maxHops=10).collect()))
-        new_u = sorted(
-            map(tuple, g.hyperBall(maxHops=10, isDirected=False).collect())
+    g = GraphFrame(v, chain.unionByName(star))
+    # vertex -> reach at hops 1..8
+    directed = {
+        0: [2, 3, 4, 5, 6, 7, 8, 8],
+        1: [2, 3, 4, 5, 6, 7, 7, 7],
+        2: [2, 3, 4, 5, 6, 6, 6, 6],
+        3: [2, 3, 4, 5, 5, 5, 5, 5],
+        4: [2, 3, 4, 4, 4, 4, 4, 4],
+        5: [2, 3, 3, 3, 3, 3, 3, 3],
+        6: [2, 2, 2, 2, 2, 2, 2, 2],
+        7: [1] * 8,
+        8: [1] * 8,
+        9: [1] * 8,
+        10: [1] * 8,
+        11: [4] * 8,
+    }
+    undirected = {
+        0: [2, 3, 4, 5, 6, 7, 8, 8],
+        1: [3, 4, 5, 6, 7, 8, 8, 8],
+        2: [3, 5, 6, 7, 8, 8, 8, 8],
+        3: [3, 5, 7, 8, 8, 8, 8, 8],
+        4: [3, 5, 7, 8, 8, 8, 8, 8],
+        5: [3, 5, 6, 7, 8, 8, 8, 8],
+        6: [3, 4, 5, 6, 7, 8, 8, 8],
+        7: [2, 3, 4, 5, 6, 7, 8, 8],
+        8: [2, 4, 4, 4, 4, 4, 4, 4],
+        9: [2, 4, 4, 4, 4, 4, 4, 4],
+        10: [2, 4, 4, 4, 4, 4, 4, 4],
+        11: [4] * 8,
+    }
+
+    def rows(curves):
+        return sorted(
+            (vid, hop, reach)
+            for vid, reaches in curves.items()
+            for hop, reach in enumerate(reaches, start=1)
         )
-        spark.conf.set(key, "legacy")
-        old_d = sorted(map(tuple, g.hyperBall(maxHops=10).collect()))
-        old_u = sorted(
-            map(tuple, g.hyperBall(maxHops=10, isDirected=False).collect())
-        )
-    finally:
-        spark.conf.unset(key)
-    assert new_d == old_d
-    assert new_u == old_u
+
+    got_d = sorted(map(tuple, g.hyperBall(maxHops=10).collect()))
+    got_u = sorted(map(tuple, g.hyperBall(maxHops=10, isDirected=False).collect()))
+    assert got_d == rows(directed)
+    assert got_u == rows(undirected)
 
 
 def test_effective_diameter_chain(spark):
@@ -1784,27 +1798,43 @@ def test_scc_fused_trim_matches_legacy(spark):
     assert len({comp[3], comp[4], comp[5], comp[6]}) == 4
 
 
-def test_svdpp_narrow_phase1_matches_triplet(spark):
-    """The round-11 narrow phase-1 build (edges joined against dst state
-    only) must reproduce the legacy full-triplet phase 1 bit-for-bit:
-    the dropped src-state join adds no columns and filters nothing, so
-    every latent factor, bias, norm and the loss are identical."""
+def test_svdpp_bipartite_pinned(spark):
+    """Pinned factors, biases, norms and loss after two iterations on a
+    small user->item rating graph (initialization is deterministic)."""
     v = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 12]], ["id"])
     e = spark.createDataFrame(
         [(1, 10, 4.0), (1, 11, 2.0), (2, 10, 5.0), (2, 11, 1.0),
          (2, 12, 3.0), (3, 12, 2.5)],
         ["src", "dst", "weight"],
     )
-    g = GraphFrame(v, e)
-    key = "spark.graphframes_spark.svdpp.phase1"
-    try:
-        spark.conf.set(key, "narrow")
-        df_n, loss_n = g.svdPlusPlus(rank=3, maxIter=2)
-        new = sorted(map(tuple, df_n.collect()))
-        spark.conf.set(key, "triplet")
-        df_t, loss_t = g.svdPlusPlus(rank=3, maxIter=2)
-        old = sorted(map(tuple, df_t.collect()))
-    finally:
-        spark.conf.unset(key)
-    assert loss_n == loss_t
-    assert new == old
+    df, loss = GraphFrame(v, e).svdPlusPlus(rank=3, maxIter=2)
+    # id -> (column1, column2, column3, column4)
+    expected = {
+        1: ([0.6037337284274904, 0.1352257795940344, 0.6633780686438142],
+            [1.2444047678803158, 1.2463046108044993, 1.2151190844601925],
+            0.037356374758218396, 0.7071067811865475),
+        2: ([0.8373077094096913, 0.35614014405724514, 0.3728047030315453],
+            [1.6241761621115431, 1.4669127357188594, 1.2169453455612242],
+            0.003733974821564963, 0.5773502691896258),
+        3: ([0.5908002200512186, 0.5252717996863013, 0.25599353895717136],
+            [1.0361197407452858, 0.8601095295752484, 0.92898921805799],
+            -0.4374896928224151, 1.0),
+        10: ([0.6872964541010312, 0.16949851872784766, 0.21129976556739802],
+             [0.34155319882025137, 0.7137810831226307, 0.3175580574722182],
+             1.5691121644250001, 0.7071067811865475),
+        11: ([0.357652525604114, 0.8486958694391383, 0.7060052148946263],
+             [0.5461796177628173, 0.8285755635878861, 0.43787533100802783],
+             -1.5000184135186467, 0.7071067811865475),
+        12: ([0.8033890307477718, 0.7309105782162572, 0.05317197041069084],
+             [0.4302175096600267, 0.32112222092777126, 0.671473110138798],
+             -0.2154941608262544, 0.7071067811865475),
+    }
+    assert loss == pytest.approx(19.560074654291704, rel=1e-9)
+    got = {r["id"]: r for r in df.collect()}
+    assert set(got) == set(expected)
+    for vid, (c1, c2, c3, c4) in expected.items():
+        row = got[vid]
+        assert row["column1"] == pytest.approx(c1, rel=1e-9)
+        assert row["column2"] == pytest.approx(c2, rel=1e-9)
+        assert row["column3"] == pytest.approx(c3, rel=1e-9)
+        assert row["column4"] == pytest.approx(c4, rel=1e-9)

@@ -349,71 +349,3 @@ def test_msg_reducer_wins_over_agg_msgs(spark):
     )
     got = {(r["id"], r["got"]) for r in result.collect()}
     assert got == {(0, 42), (1, 0), (2, 0)}
-
-
-@pytest.mark.parametrize("window", [2, 3, 4])
-def test_stop_check_interval_preserves_early_stop_revert(spark, window):
-    # Same drift construction as test_early_stopping_returns_state_before_
-    # empty_round: the update adds +1000 to message-less vertices, so a
-    # windowed probe that returned the wrong intermediate frame (anything
-    # but the state the message-less superstep started from) would shift
-    # the values by a multiple of 1000. Exercises mid-window stops at
-    # every alignment of the convergence superstep vs the probe cadence.
-    v = spark.createDataFrame([(0, 0), (1, 999), (2, 999), (3, 999)], ["id", "dist"])
-    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["src", "dst"])
-    g = GraphFrame(v, e)
-    expected = None
-    for w in (1, window):
-        result = (
-            g.pregel.withVertexColumn(
-                "d",
-                F.col("dist"),
-                F.coalesce(Pregel.msg(), F.col("d") + 1000),
-            )
-            .sendMsgToDst(
-                F.when(Pregel.src("d") + 1 < Pregel.dst("d"), Pregel.src("d") + 1)
-            )
-            .aggMsgs(F.min(Pregel.msg()))
-            .setEarlyStopping(True)
-            .setStopCheckInterval(w)
-            .setMaxIter(10)
-            .run()
-        )
-        got = {(r["id"], r["d"]) for r in result.collect()}
-        if expected is None:
-            expected = got
-        else:
-            assert got == expected, f"window={w} diverged from per-superstep probe"
-
-
-@pytest.mark.parametrize("window", [2, 3])
-def test_stop_check_interval_preserves_vote_to_halt(spark, window):
-    v = spark.createDataFrame([(0,), (1,), (2,), (3,)], ["id"])
-    e = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["src", "dst"])
-    g = GraphFrame(v, e)
-    expected = None
-    for w in (1, window):
-        result = (
-            g.pregel.withVertexColumn(
-                "dist",
-                F.when(F.col("id") == 0, F.lit(0)).otherwise(F.lit(999)),
-                F.least(F.col("dist"), F.coalesce(Pregel.msg(), F.lit(999))),
-            )
-            .sendMsgToDst(
-                F.when(Pregel.src("_pregel_is_active"), Pregel.src("dist") + 1)
-            )
-            .aggMsgs(F.min(Pregel.msg()))
-            .setInitialActiveVertexExpression(F.col("id") == 0)
-            .setUpdateActiveVertexExpression(
-                Pregel.msg().isNotNull() & (Pregel.msg() < F.col("dist"))
-            )
-            .setStopIfAllNonActiveVertices(True)
-            .setStopCheckInterval(w)
-            .setMaxIter(50)
-            .run()
-        )
-        got = {(r["id"], r["dist"]) for r in result.collect()}
-        if expected is None:
-            expected = got
-        else:
-            assert got == expected, f"window={w} diverged from per-superstep probe"

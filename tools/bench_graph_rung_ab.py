@@ -6,8 +6,8 @@ Modes:
              (fused vs legacy) via strongly_connected_components(maxIter=10)
   pic      — interleaved A/B of spark.graphframes_spark.pic.materialize
              (edges vs legacy) via deterministic PIC (k=4, unit weights)
-  louvain  — plain rung measurement (louvain.impl=v11 default), for the
-             scaling exponent vs a lower rung
+  louvain  — plain rung measurement, for the scaling exponent vs a
+             lower rung
 
 Usage: python tools/bench_graph_rung_ab.py <mode> [out.json]
 Env: SPARK_GRAFT_CPUS (32), RUNG_SCALE (10.0 — multiple of wiki-Talk),

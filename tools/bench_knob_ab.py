@@ -3,14 +3,13 @@
 One session, one warmup of each arm, then N paired reps strictly
 alternated (A,B,A,B,...) so ambient load — including hypervisor steal —
 hits both arms equally; reports per-arm median, the per-pair delta
-distribution, and bench.py's load context. Generalizes
-tools/bench_louvain_ab.py (the round-8 sssp/hits protocol) to any knob.
+distribution, and bench.py's load context.
 
 Usage:
     python tools/bench_knob_ab.py <query> <conf_key> <valA> <valB> [reps] [out.json]
 
 conf_key is relative to the spark.graphframes_spark. prefix,
-e.g. ``dedup.materialize``. valA is the candidate, valB the baseline.
+e.g. ``scc.trim``. valA is the candidate, valB the baseline.
 """
 
 from __future__ import annotations
