@@ -222,9 +222,6 @@ def minhash_lsh_dedup(
             for p in range(num_perm)
         ]
     )
-    from graphframes_spark.harness import get_conf
-
-    spark = df.sparkSession
     sigs = mins.select(
         ID, F.array(*[F.col(f"_m{p}") for p in range(num_perm)]).alias("_sig")
     ).persist()
@@ -254,10 +251,10 @@ def minhash_lsh_dedup(
     # the verify join consumes cand_sh TWICE (sh_a and sh_b) and Catalyst
     # does not dedup the two subtrees, so the candidate slice's
     # tokenize+shingle pass would run twice; persist it (candidate-sized,
-    # a tiny fraction of the corpus) so it runs once. dedup.candShingles=
-    # recompute keeps the cache-free legacy shape (ablation arm).
-    if get_conf(spark, "dedup.candShingles", "persist") == "persist":
-        cand_sh = cand_sh.persist()
+    # a tiny fraction of the corpus) so it runs once: +7.3% at a 2M-doc
+    # rung (BENCH_dedup_band_r12.json), a wash at sf0.1
+    # (BENCH_knob_retire.json).
+    cand_sh = cand_sh.persist()
     sh_a = cand_sh.select(F.col(ID).alias("id_a"), F.col("_sh").alias("_sh_a"))
     sh_b = cand_sh.select(F.col(ID).alias("id_b"), F.col("_sh").alias("_sh_b"))
     edges = (

@@ -467,13 +467,7 @@ class GraphFrame:
         for d in dfs[1:]:
             ret = ret.unionByName(d, allowMissingColumns=True)
         # the reference globally sorts var-length results (GraphFrame.scala:656)
-        # — a full-result sort that is pure overhead at scale; keep it for
-        # parity but allow opting out via conf
-        from graphframes_spark.harness import get_conf
-
-        if get_conf(self.spark, "motif.sortVarLength", "true") == "true":
-            ret = ret.orderBy("_hop", "_direction")
-        return ret
+        return ret.orderBy("_hop", "_direction")
 
     def _find_augmented(self, pattern: str) -> DataFrame:
         pats = P.parse(pattern)

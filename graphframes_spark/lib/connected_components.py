@@ -270,7 +270,6 @@ def incremental_connected_components(
     domain, and the invariant guard compares lexicographically.
     """
     from graphframes_spark.graphframe import GraphFrame
-    from graphframes_spark.harness import get_conf
     from graphframes_spark.util import GraphFramesError
 
     labels_mode = not has_integral_id_type(graph.vertices)
@@ -338,14 +337,12 @@ def incremental_connected_components(
         .filter(F.col(SRC) != F.col(DST))
         .distinct()
         # delta-sized; scanned by touched (twice) and the contracted CC.
-        # LAZY checkpoint (round 12, default): the plan is cut to a leaf
-        # immediately, and the contracted CC's first convergence-stats
-        # action (which reads these edges) materializes it in the same
-        # job — one fewer delta-sized action per incremental round.
-        # cc.ckptFold=eager restores the legacy shape (ablation arm).
-        .localCheckpoint(
-            eager=get_conf(graph.spark, "cc.ckptFold", "lazy") == "eager"
-        )
+        # LAZY checkpoint: the plan is cut to a leaf immediately, and the
+        # contracted CC's first convergence-stats action (which reads
+        # these edges) materializes it in the same job — one fewer
+        # delta-sized action per incremental round (an eager arm read
+        # 4.15 s vs 4.41 s, 7/10 pairs, inside noise: BENCH_knob_retire.json).
+        .localCheckpoint(eager=False)
     )
     # contracted graph: only components touched by a cross-component new
     # edge need to participate; untouched components keep their label
@@ -484,7 +481,6 @@ def _two_phase_loop(
     # factor <= 0 disables detection (plain AQE joins everywhere).
     giant_factor = int(get_conf(spark, "cc.giantStarFactor", "4"))
     giant_floor = int(get_conf(spark, "cc.giantStarFloor", "1000000"))
-    ckpt_eager = get_conf(spark, "cc.ckptFold", "lazy") == "eager"
     n_part = shuffle_partitions(spark)
 
     def _detect_giants(min_nbrs: DataFrame, total_cnt: int) -> list:
@@ -578,15 +574,13 @@ def _two_phase_loop(
             .distinct()
         )
         if checkpoint_interval > 0 and iteration % checkpoint_interval == 0:
-            # LAZY checkpoint (round 12, default): the convergence-stats
-            # action below computes min_nbrs from this very frame in the
-            # same loop iteration, so the checkpoint materializes (and
-            # truncates lineage) inside that job — one action per
-            # iteration instead of two. (The harness's lazy-checkpoint
-            # warning is about checkpoints whose materialization never
-            # comes; here it is immediate.) cc.ckptFold=eager restores the
-            # legacy two-action shape (ablation arm).
-            new_ee = harness.checkpoint(new_ee, eager=ckpt_eager)
+            # LAZY checkpoint: the convergence-stats action below computes
+            # min_nbrs from this very frame in the same loop iteration, so
+            # the checkpoint materializes (and truncates lineage) inside
+            # that job — one action per iteration instead of two. (The
+            # harness's lazy-checkpoint warning is about checkpoints whose
+            # materialization never comes; here it is immediate.)
+            new_ee = harness.checkpoint(new_ee, eager=False)
         ee = harness.persist(new_ee)
 
         min_nbrs1 = harness.persist(_min_nbrs(ee, with_cnt=True))

@@ -39,10 +39,6 @@ if TYPE_CHECKING:
 
 LABEL_ID = "label"
 
-#: ablation switch for the two-level majority-vote reduction (see module
-#: docstring); False falls back to the single-level mode() aggregate
-USE_TWO_LEVEL_MODE = True
-
 
 def _two_level_mode(msg_df: DataFrame) -> DataFrame:
     """DF[id, msg] -> DF[id, msg]: most frequent msg per id, ties to the
@@ -61,13 +57,6 @@ def _two_level_mode(msg_df: DataFrame) -> DataFrame:
             ),
         ).alias(MSG_COL_NAME)
     )
-
-
-def _majority_vote(pregel: Pregel) -> Pregel:
-    """Attach the majority-vote reduction to a CDLP-family Pregel."""
-    if USE_TWO_LEVEL_MODE:
-        return pregel.setMsgReducer(_two_level_mode)
-    return pregel.aggMsgs(F.mode(Pregel.msg(), deterministic=True))
 
 
 def label_propagation(
@@ -98,7 +87,7 @@ def label_propagation(
         )
 
     # most frequent incoming label, ties -> lowest (two-level reduction)
-    pregel = _majority_vote(pregel)
+    pregel = pregel.setMsgReducer(_two_level_mode)
 
     labels = pregel.run().select(ID, LABEL_ID)
     return graph.vertices.join(labels, on=ID, how="inner")
@@ -162,7 +151,7 @@ def seeded_label_propagation(
         pregel = pregel.requiredDstColumns(LABEL_ID).sendMsgToSrc(
             Pregel.dst(LABEL_ID)
         )
-    pregel = _majority_vote(pregel)
+    pregel = pregel.setMsgReducer(_two_level_mode)
 
     labels = pregel.run().select(ID, F.col(LABEL_ID).alias(label_col))
     return graph.vertices.join(labels, on=ID, how="inner")

@@ -18,7 +18,6 @@ from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from graphframes_spark.indexing import has_integral_id_type, indexed_edges, indexed_vertices
 from graphframes_spark.util import ATTR, DST, ID, LONG_DST, LONG_ID, LONG_SRC, SRC
@@ -131,58 +130,19 @@ def _deterministic_pic(
     # in the projection, so message values are bit-identical to casting
     # at use sites.
     if weight_col is not None:
-        base_edges = graph.edges.select(
+        edges = graph.edges.select(
             SRC, DST, F.col(weight_col).cast("double").alias("_pic_w")
         )
         w_expr = F.col("_pic_w")
     else:
-        base_edges = graph.edges.select(SRC, DST)
+        edges = graph.edges.select(SRC, DST)
         w_expr = F.lit(1.0)
-    # The affinity matrix is scanned by every consumer below (the stats
-    # aggregate, the rowsum degree aggregate, and each fused power-
-    # iteration window). ``pic.materialize=edges`` persists the projected
-    # edge list once so the caller's build pipeline executes a single
-    # time instead of once per consumer — built round 11 on the 100 TB
-    # argument, A/B'd as a local wash then. **Round 12's mandated
-    # at-scale A/B reversed it** (BENCH_rung_knobs_r12.json): at a
-    # 15M-edge LDBC-shaped rung the cached arm is −13% (−20.2/−6.1% per
-    # pair, steal ≤1.3) — for scan-backed affinity pipelines the cache
-    # write+read costs more than the ~6 cheap re-projections it saves,
-    # the same verdict the dedup band-table cache got. The default is
-    # therefore ``legacy`` (re-execute per consumer); select ``edges``
-    # when the affinity build is genuinely expensive (multi-join
-    # pipelines) rather than a projected scan. The emptiness-probe fold
-    # (stats count doubles as the probe; the former isEmpty() executed
-    # the whole edge pipeline for one boolean) is unconditional and
-    # independent of this knob.
-    from graphframes_spark.harness import get_conf
-
-    materialize = get_conf(graph.spark, "pic.materialize", "legacy") == "edges"
-    edges = base_edges
-    if materialize:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    try:
-        return _deterministic_pic_body(
-            graph, k, max_iter, weight_col, edges, w_expr
-        )
-    finally:
-        # always released, including on exceptions mid-build/mid-run
-        # (unpersist is idempotent, so the early release below is fine)
-        edges.unpersist()
-
-
-def _deterministic_pic_body(
-    graph: "GraphFrame",
-    k: int,
-    max_iter: int,
-    weight_col: Optional[str],
-    edges: DataFrame,
-    w_expr,
-) -> DataFrame:
-    from graphframes_spark.pregel import Pregel
-    from graphframes_spark.util import GraphFramesError
-
-    from graphframes_spark.graphframe import GraphFrame
+    # The affinity matrix is re-executed by each consumer below (the
+    # stats aggregate, the rowsum degree aggregate, and each fused power-
+    # iteration window): persisting it read -13% at a 15M-edge rung
+    # (BENCH_rung_knobs_r12.json) and -0.5% at sf0.1, 4/10 pairs
+    # (BENCH_knob_retire.json): the cache write+read costs more than the
+    # cheap re-projections it saves.
     # one edge scan yields the affinity total (== the vertex rowsum total,
     # since edgeless vertices contribute 0), the validity check, and the
     # edge count (emptiness probe)
@@ -237,10 +197,6 @@ def _deterministic_pic_body(
         .run()
         .select(ID, "_pic_v")
     )
-    # run() has materialized the final state (harness.finish), so every
-    # later consumer reads the pregel result, never the edge cache
-    edges.unpersist()
-
     total_v = ranks.agg(F.sum("_pic_v")).collect()[0][0] or 0.0
     if total_v <= 0.0:
         return graph.vertices.select(ID).withColumn(

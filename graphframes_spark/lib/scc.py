@@ -30,7 +30,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphframes_spark.harness import IterationHarness, get_conf
+from graphframes_spark.harness import IterationHarness
 from graphframes_spark.indexing import has_integral_id_type, indexed_edges, indexed_vertices
 from graphframes_spark.pregel import Pregel
 from graphframes_spark.util import ATTR, DST, ID, LONG_DST, LONG_ID, LONG_SRC, SRC
@@ -160,61 +160,18 @@ def strongly_connected_components(graph: "GraphFrame", max_iter: int = 20) -> Da
         # checkpointed state (cached scan), not a separate anti-join job.
         pre_trim_v = work_v
         n_before = n_pre_trim = work_v.count()
-        # trim shape (round 11): "fused" computes has-out/has-in in ONE
-        # exploded-endpoint aggregate (map-side partial max) and keeps
-        # vertices with both flags via a single semi-join — one Exchange
-        # and one join per fixpoint round instead of two distinct
-        # shuffles over the edge endpoints plus two semi-joins. The
-        # quiet-machine interleaved A/B at sf0.1 read fused at -4.4%
-        # median with 7/12 pairs negative (BENCH_scc_ab_r11.json) — a
-        # statistical wash with no measured upside, and the explode
-        # doubles the pre-aggregate row count, so the measured legacy
-        # shape stays the default; "fused" remains selectable
-        # (spark.graphframes_spark.scc.trim). Round 12's mandated
-        # at-scale A/B (15M-edge LDBC-shaped rung, maxIter=10,
-        # BENCH_rung_knobs_r12.json): fused +7.4% median, pairs
-        # -2.2/+17.8% under steal 0.7-2.1 cores — directionally
-        # positive where the endpoint exchange dominates, not decisive
-        # enough to flip the sf0.1-measured default. Knob KEPT with the
-        # at-scale number on record.
-        fused_trim = get_conf(spark, "scc.trim", "legacy") == "fused"
+        # trim shape: two distinct endpoint sets + two semi-joins; a fused
+        # exploded-endpoint aggregate doubles the pre-aggregate rows and
+        # read -1.9% at sf0.1, 3/10 pairs (BENCH_knob_retire.json)
         while True:
-            if fused_trim:
-                keep = (
-                    work_e.select(
-                        F.explode(
-                            F.array(
-                                F.struct(
-                                    F.col(SRC).alias(ID),
-                                    F.lit(1).alias("_o"),
-                                    F.lit(0).alias("_i"),
-                                ),
-                                F.struct(
-                                    F.col(DST).alias(ID),
-                                    F.lit(0).alias("_o"),
-                                    F.lit(1).alias("_i"),
-                                ),
-                            )
-                        ).alias("_x")
-                    )
-                    .select("_x.*")
-                    .groupBy(ID)
-                    .agg(F.max("_o").alias("_ho"), F.max("_i").alias("_hi"))
-                    .filter((F.col("_ho") == 1) & (F.col("_hi") == 1))
-                    .select(ID)
-                )
-                non_trivial = harness.checkpoint(
-                    work_v.join(keep, on=ID, how="left_semi"), eager=True
-                )
-            else:
-                srcs = work_e.select(F.col(SRC).alias(ID)).distinct()
-                dsts = work_e.select(F.col(DST).alias(ID)).distinct()
-                non_trivial = harness.checkpoint(
-                    work_v.join(srcs, on=ID, how="left_semi").join(
-                        dsts, on=ID, how="left_semi"
-                    ),
-                    eager=True,
-                )
+            srcs = work_e.select(F.col(SRC).alias(ID)).distinct()
+            dsts = work_e.select(F.col(DST).alias(ID)).distinct()
+            non_trivial = harness.checkpoint(
+                work_v.join(srcs, on=ID, how="left_semi").join(
+                    dsts, on=ID, how="left_semi"
+                ),
+                eager=True,
+            )
             n_after = non_trivial.count()
             if n_after == n_before:
                 break

@@ -103,11 +103,13 @@ def test_label_propagation_two_level_equals_mode(spark):
     produce EXACTLY the labels of the single-level mode(deterministic)
     aggregate it replaced — same winner, same ties-to-lowest — on a
     skewed random directed graph where hub vertices see many duplicate
-    and tied labels."""
+    and tied labels. Both runs use labelPropagation's Pregel program and
+    differ only in the message reduction."""
     import pyspark.sql.functions as F
 
     from graphframes_spark import GraphFrame
-    from graphframes_spark.lib import label_propagation as lpa_mod
+    from graphframes_spark.lib.label_propagation import LABEL_ID, _two_level_mode
+    from graphframes_spark.pregel import Pregel
 
     e = (
         spark.range(4000)
@@ -129,14 +131,27 @@ def test_label_propagation_two_level_equals_mode(spark):
     )
     v = spark.range(60).select(F.col("id"))
     g = GraphFrame(v, e)
-    try:
-        lpa_mod.USE_TWO_LEVEL_MODE = True
-        two = {r["id"]: r["label"] for r in g.labelPropagation(maxIter=4).collect()}
-        lpa_mod.USE_TWO_LEVEL_MODE = False
-        mode = {r["id"]: r["label"] for r in g.labelPropagation(maxIter=4).collect()}
-    finally:
-        lpa_mod.USE_TWO_LEVEL_MODE = True
+
+    def labels(reduce):
+        new_label = F.coalesce(Pregel.msg(), F.col(LABEL_ID))
+        pregel = (
+            g.pregel.withVertexColumn(LABEL_ID, F.col("id"), new_label)
+            .setMaxIter(4)
+            .setCheckpointInterval(1)
+            .setStopIfAllNonActiveVertices(True)
+            .setUpdateActiveVertexExpression(F.col(LABEL_ID) != new_label)
+            .requiredSrcColumns(LABEL_ID)
+            .sendMsgToDst(Pregel.src(LABEL_ID))
+        )
+        rows = reduce(pregel).run().select("id", LABEL_ID).collect()
+        return {r["id"]: r[LABEL_ID] for r in rows}
+
+    two = labels(lambda p: p.setMsgReducer(_two_level_mode))
+    mode = labels(lambda p: p.aggMsgs(F.mode(Pregel.msg(), deterministic=True)))
     assert two == mode
+    # the two-level reducer is what labelPropagation runs
+    lpa = {r["id"]: r["label"] for r in g.labelPropagation(maxIter=4).collect()}
+    assert lpa == two
 
 
 def test_triangle_count(spark):

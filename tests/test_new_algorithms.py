@@ -206,10 +206,9 @@ def test_pic_deterministic_empty_edges(spark):
     assert set(res.columns) == {"id", "cluster"}
 
 
-def test_pic_materialize_matches_legacy(spark):
-    """The round-11 affinity-matrix materialization (edges persisted once,
-    emptiness probe folded into the stats aggregate) is output-identical
-    to the legacy re-execute-per-consumer shape, weighted and unweighted."""
+def test_pic_two_cliques_pinned(spark):
+    """Deterministic PIC on two disjoint cliques (sizes 3 and 5) splits
+    them into one cluster each, weighted and unweighted."""
     sizes = [3, 5]
     ids, edges, off = [], [], 0
     for s in sizes:
@@ -220,30 +219,17 @@ def test_pic_materialize_matches_legacy(spark):
     v = spark.createDataFrame([(i,) for i in ids], ["id"])
     e = spark.createDataFrame(edges, ["src", "dst", "w"])
     g = GraphFrame(v, e)
-    key = "spark.graphframes_spark.pic.materialize"
-    try:
-        spark.conf.set(key, "edges")
-        new = sorted(
-            map(tuple, g.powerIterationClustering(
-                k=2, maxIter=6, weightCol="w", deterministic=True).collect())
-        )
-        new_uw = sorted(
-            map(tuple, g.powerIterationClustering(
-                k=2, maxIter=6, deterministic=True).collect())
-        )
-        spark.conf.set(key, "legacy")
-        old = sorted(
-            map(tuple, g.powerIterationClustering(
-                k=2, maxIter=6, weightCol="w", deterministic=True).collect())
-        )
-        old_uw = sorted(
-            map(tuple, g.powerIterationClustering(
-                k=2, maxIter=6, deterministic=True).collect())
-        )
-    finally:
-        spark.conf.unset(key)
-    assert new == old
-    assert new_uw == old_uw
+    weighted = sorted(
+        map(tuple, g.powerIterationClustering(
+            k=2, maxIter=6, weightCol="w", deterministic=True).collect())
+    )
+    unweighted = sorted(
+        map(tuple, g.powerIterationClustering(
+            k=2, maxIter=6, deterministic=True).collect())
+    )
+    expected = [(0, 0), (1, 0), (2, 0), (3, 1), (4, 1), (5, 1), (6, 1), (7, 1)]
+    assert weighted == expected
+    assert unweighted == expected
 
 
 def test_pic_string_ids(friends):
@@ -1766,13 +1752,11 @@ def test_effective_diameter_chain(spark):
         GraphFrame(v, e).effectiveDiameter(quantile=0.0)
 
 
-# ---------------------------------------------- round-11 knob equivalence
+# ------------------------------------------------------- pinned outputs
 
 
-def test_scc_fused_trim_matches_legacy(spark):
-    """The round-11 fused endpoint-aggregate trim must keep the exact
-    kept-vertex set (and thus the assignment) of the legacy
-    two-distincts + two-semi-joins shape, including multi-round trim
+def test_scc_cascade_trim_pinned(spark):
+    """The trim loop keeps the exact assignment across multi-round trim
     cascades (chain tails that only become trimmable after their
     predecessor is trimmed) and trim-only vertices with no edges."""
     v = spark.createDataFrame([(i,) for i in range(9)], ["id"])
@@ -1782,17 +1766,13 @@ def test_scc_fused_trim_matches_legacy(spark):
         [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (0, 5), (6, 0), (7, 8), (8, 7)],
         ["src", "dst"],
     )
-    g = GraphFrame(v, e)
-    key = "spark.graphframes_spark.scc.trim"
-    try:
-        spark.conf.set(key, "fused")
-        new = sorted(map(tuple, g.stronglyConnectedComponents(10).collect()))
-        spark.conf.set(key, "legacy")
-        old = sorted(map(tuple, g.stronglyConnectedComponents(10).collect()))
-    finally:
-        spark.conf.unset(key)
-    assert new == old
-    comp = dict(new)
+    got = sorted(
+        map(tuple, GraphFrame(v, e).stronglyConnectedComponents(10).collect())
+    )
+    assert got == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 5), (6, 6), (7, 7), (8, 7)
+    ]
+    comp = dict(got)
     assert comp[0] == comp[1] == comp[2]
     assert comp[7] == comp[8]
     assert len({comp[3], comp[4], comp[5], comp[6]}) == 4

@@ -1,17 +1,14 @@
 """At-scale measurements on the LDBC-shaped graph for graph operators
 outside bench_ldbc.py's wcc/cdlp/shortest_paths/pagerank set.
 
-Modes:
-  scc      — interleaved A/B of spark.graphframes_spark.scc.trim
-             (fused vs legacy) via strongly_connected_components(maxIter=10)
-  pic      — interleaved A/B of spark.graphframes_spark.pic.materialize
-             (edges vs legacy) via deterministic PIC (k=4, unit weights)
-  louvain  — plain rung measurement, for the scaling exponent vs a
-             lower rung
+Modes (plain rung timing, for the scaling exponent vs a lower rung):
+  scc      — strongly_connected_components(maxIter=10)
+  pic      — deterministic PIC (k=4, unit weights)
+  louvain  — louvain(maxPasses=2, maxRoundsPerPass=6)
 
-Usage: python tools/bench_graph_rung_ab.py <mode> [out.json]
+Usage: python tools/bench_graph_rung.py <mode> [out.json]
 Env: SPARK_GRAFT_CPUS (32), RUNG_SCALE (10.0 — multiple of wiki-Talk),
-RUNG_PAIRS (2), RUNG_MEM (48g), RUNG_WARMUP (0/1, default 1).
+RUNG_PAIRS (2 — timed passes), RUNG_MEM (48g), RUNG_WARMUP (0/1, default 1).
 """
 
 from __future__ import annotations
@@ -30,12 +27,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import bench_ldbc  # noqa: E402
 from bench import LoadMonitor  # noqa: E402
-
-KNOBS = {
-    "scc": ("scc.trim", "fused", "legacy"),
-    "pic": ("pic.materialize", "edges", "legacy"),
-    "louvain": (None, None, None),
-}
 
 
 def main() -> None:
@@ -75,62 +66,28 @@ def main() -> None:
     else:
         raise SystemExit(f"unknown mode {mode!r}")
 
-    key, arm_a, arm_b = KNOBS[mode]
     monitor = LoadMonitor(spark)
-
-    def run_once(val):
-        if key is not None:
-            spark.conf.set("spark.graphframes_spark." + key, val)
-        spark.sparkContext.setJobDescription(f"rung:{mode}:{val}")
+    spark.sparkContext.setJobDescription(f"rung:{mode}")
+    passes, loads = [], []
+    for i in range(pairs + (1 if warmup else 0)):
         tok = monitor.start()
         t0 = time.perf_counter()
         fn().write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0, monitor.finish(tok)
-
-    report: dict = {
+        dt, ld = time.perf_counter() - t0, monitor.finish(tok)
+        print(f"# pass {i}: {dt:.1f}s (steal {ld['steal_cores']})", file=sys.stderr)
+        if warmup and i == 0:
+            continue
+        passes.append(round(dt, 3))
+        loads.append(ld)
+    report = {
         "mode": mode,
         "scale": scale,
         "edges_distinct": n_edges,
         "cpus": cpus,
+        "passes": passes,
+        "median_s": round(statistics.median(passes), 3),
+        "load_context": loads,
     }
-    if key is None:
-        passes, loads = [], []
-        n = pairs + (1 if warmup else 0)
-        for i in range(n):
-            dt, ld = run_once(None)
-            print(f"# pass {i}: {dt:.1f}s (steal {ld['steal_cores']})", file=sys.stderr)
-            if warmup and i == 0:
-                continue
-            passes.append(round(dt, 3))
-            loads.append(ld)
-        report.update({"passes": passes, "median_s": round(statistics.median(passes), 3),
-                       "load_context": loads})
-    else:
-        if warmup:
-            for val in (arm_a, arm_b):
-                dt, _ = run_once(val)
-                print(f"# warmup {val}: {dt:.1f}s", file=sys.stderr)
-        samples = {arm_a: [], arm_b: []}
-        loads = []
-        for i in range(pairs):
-            for val in (arm_a, arm_b):
-                dt, ld = run_once(val)
-                samples[val].append(round(dt, 3))
-                loads.append({"arm": val, **ld})
-                print(f"# pair {i} {val}: {dt:.1f}s (steal {ld['steal_cores']})", file=sys.stderr)
-        med_a = statistics.median(samples[arm_a])
-        med_b = statistics.median(samples[arm_b])
-        report.update({
-            "conf_key": "spark.graphframes_spark." + key,
-            "arm_a": arm_a, "arm_b": arm_b,
-            "a_median_s": round(med_a, 3), "b_median_s": round(med_b, 3),
-            "median_improvement_pct": round(100.0 * (med_b - med_a) / med_b, 1),
-            "per_pair_improvement_pct": [
-                round(100.0 * (b - a) / b, 1)
-                for a, b in zip(samples[arm_a], samples[arm_b])
-            ],
-            "samples": samples, "load_context": loads,
-        })
     print(json.dumps(report))
     if out_path:
         with open(out_path, "w") as f:
