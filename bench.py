@@ -27,9 +27,11 @@ samples; queries that exhaust the retry budget are listed in
 discount them. The timed action (noop sink), interleaving, env-var
 contract and the one-line JSON are unchanged — additions only.
 
-Prints ONE JSON line:
+Prints ONE JSON line of at most 1900 chars:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
- "spread": {name: [min, max]}, "supersteps": {...}, "sf": ...}
+ "load": {...}, "contaminated_queries": [...], "sf": ...}
+plus ``queries_omitted`` (names of the queries the line has no room for)
+when it must shrink; the full result goes to ``bench_full_latest.json``.
 """
 
 from __future__ import annotations
@@ -136,6 +138,25 @@ HEADLINE = [
 ]
 
 
+#: share of the host's memory given to the driver heap (as perfbench does)
+HEAP_SHARE = 0.25
+#: jobs and stages the status store keeps, so that a per-query read sees
+#: all of them (louvain_copurchase runs 355 stages, sssp 249; a limit of
+#: 100 evicted their early stages before the query finished)
+RETAINED = 100_000
+
+
+def host_heap_mb() -> int:
+    """A quarter of MemTotal: local mode runs every executor thread in the
+    driver JVM, and a fixed heap larger than the host would let the JVM
+    grow past physical memory instead of collecting."""
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(int(line.split()[1]) / 1024 * HEAP_SHARE)
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
+
 def build_session(cpus: int) -> SparkSession:
     return (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -143,16 +164,16 @@ def build_session(cpus: int) -> SparkSession:
         # local mode runs all executor threads inside the driver JVM; the
         # 1g default heap OOMs at sf0.1 (plan-string rendering alone can
         # exhaust it on deep iterative plans)
-        .config("spark.driver.memory", "32g")
+        .config("spark.driver.memory", f"{host_heap_mb()}m")
         # the SQL status store retains 1000 executions even with the UI
         # off; deep iterative plans carry thousands of metrics each, so
         # a 62-query run would pin GBs of dead SQLPlanMetric arrays.
-        # (No forced periodic GC here: System.gc() on a 32g heap is a
+        # (No forced periodic GC here: System.gc() on a large heap is a
         # multi-second STW pause that lands inside measured queries —
-        # A/B'd at +16% on pagerank; the 32g heap absorbs dead blocks.)
+        # A/B'd at +16% on pagerank.)
         .config("spark.sql.ui.retainedExecutions", "16")
-        .config("spark.ui.retainedJobs", "100")
-        .config("spark.ui.retainedStages", "100")
+        .config("spark.ui.retainedJobs", str(RETAINED))
+        .config("spark.ui.retainedStages", str(RETAINED))
         .config("spark.sql.maxPlanStringLength", str(4 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", str(2 * cpus))
         .config("spark.sql.adaptive.enabled", "true")
@@ -257,6 +278,29 @@ def _is_clean(ctx: dict) -> bool:
         ctx["steal_cores"] <= STEAL_THRESHOLD
         and ctx["cotenant_cores"] <= COTENANT_THRESHOLD
     )
+
+
+#: the stdout line must stay under a 2000-char stdout-tail capture
+LINE_LIMIT = 1900
+#: queries the line keeps by time when all of them do not fit
+KEEP_SLOWEST = 40
+
+
+def compact_line(compact: dict, timings: dict[str, float]) -> str:
+    """``compact`` as one JSON line of at most LINE_LIMIT chars.
+
+    When every query does not fit, the line keeps the KEEP_SLOWEST
+    slowest (fewer, if even those do not fit) and names every other
+    query key in ``queries_omitted``: a query never drops silently."""
+    line = json.dumps(compact)
+    ranked = sorted(timings, key=lambda k: -timings[k])
+    keep = KEEP_SLOWEST
+    while len(line) > LINE_LIMIT and keep >= 0:
+        compact["queries"] = {k: round(timings[k], 2) for k in ranked[:keep]}
+        compact["queries_omitted"] = ranked[keep:]
+        line = json.dumps(compact)
+        keep -= 1
+    return line
 
 
 def main() -> None:
@@ -405,15 +449,7 @@ def main() -> None:
         "contaminated_queries": contaminated,
         "sf": sf_val,
     }
-    line = json.dumps(compact)
-    if len(line) > 1900:  # belt-and-braces: never exceed the tail capture
-        slowest = dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])[:40]
-        )
-        compact["queries"] = {k: round(v, 2) for k, v in slowest.items()}
-        compact["queries_truncated_to_slowest"] = len(slowest)
-        line = json.dumps(compact)
-    print(line)
+    print(compact_line(compact, timings))
 
 
 if __name__ == "__main__":

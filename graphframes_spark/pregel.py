@@ -15,6 +15,10 @@ Scale notes:
   maxIter runs stay cache-free — supersteps fuse into one job per
   checkpoint window and Catalyst's ReusedExchange dedups the edge
   shuffle inside it (caching there measurably breaks pipelining);
+- fused supersteps hash-join on the vertex side (GraphX's
+  ``VertexPartition`` shape) instead of sort-merging the edge stream, so
+  one shuffle partition of vertex state must fit in task memory; at
+  scale raise ``spark.sql.shuffle.partitions`` rather than expect a spill;
 - the dst-side join is skipped entirely when no message expression
   references dst state (auto-detected from the message expressions'
   string form, with explicit required-columns hints as the escape hatch).
@@ -331,7 +335,19 @@ class Pregel:
         # 2.2x slower with persists on a 600k-edge PageRank at sf0.1.
         # Voting mode re-executes state across per-superstep probe
         # actions, where the caches are load-bearing — keep them there.
+        # Fused supersteps also hash-join on the vertex side: a sort-merge
+        # join re-sorts the whole reused edge exchange every superstep
+        # (2.58M rows per superstep on the hub-skewed perfbench graph),
+        # while a hash table over one partition of vertex state, as in
+        # GraphX's VertexPartition, never sorts. A hint blocks AQE's
+        # runtime SMJ→broadcast conversion, which the shrinking frontiers
+        # of voting mode live on, so voting mode keeps unhinted joins.
+        # Fused runs on graphs small enough to broadcast pay for it too:
+        # katz and eigenvector at sf0.1 +0.05/+0.09 s (BENCH_fused_shj.json).
         fused = not use_obs
+
+        def vertex_side(df: DataFrame) -> DataFrame:
+            return df.hint("shuffle_hash") if fused else df
 
         # Pre-shape + co-partition edges once; every superstep's src join
         # then shuffles only the (smaller) vertex-state side. The full
@@ -404,7 +420,8 @@ class Pregel:
             src_struct = F.struct(
                 *[F.col(c) for c in src_names] if src_names else [F.col("*")]
             )
-            src_with_edges = src_vertices.select(src_struct.alias(SRC)).join(
+            src_state = vertex_side(src_vertices.select(src_struct.alias(SRC)))
+            src_with_edges = src_state.join(
                 edges, Pregel.src(ID) == F.col("_pregel_edge_src")
             )
 
@@ -413,7 +430,7 @@ class Pregel:
                     *[F.col(c) for c in dst_names] if dst_names else [F.col("*")]
                 )
                 triplets = src_with_edges.join(
-                    current.select(dst_struct.alias(DST)),
+                    vertex_side(current.select(dst_struct.alias(DST))),
                     F.col("_pregel_edge_dst") == Pregel.dst(ID),
                 ).drop("_pregel_edge_src", "_pregel_edge_dst")
                 if self._skip_messages_from_non_active:
@@ -467,7 +484,7 @@ class Pregel:
                 agg_df = agg_df.withColumn("_pregel_has_msg", F.lit(1))
 
             join_base = static_v if static_rebase else current
-            with_msg = join_base.join(agg_df, on=[ID], how="left_outer")
+            with_msg = join_base.join(vertex_side(agg_df), on=[ID], how="left_outer")
             if obs is not None:
                 with_msg = with_msg.observe(
                     obs, F.count(F.col("_pregel_has_msg")).alias("msg_cnt")

@@ -349,3 +349,65 @@ def test_msg_reducer_wins_over_agg_msgs(spark):
     )
     got = {(r["id"], r["got"]) for r in result.collect()}
     assert got == {(0, 42), (1, 0), (2, 0)}
+
+
+# Join strategy per mode. Fused supersteps (no stop condition) hash-join
+# on the vertex side, so no superstep sorts the edge stream; the voting
+# path keeps unhinted joins, which AQE can turn into broadcasts as the
+# frontier shrinks.
+
+
+@pytest.fixture(scope="module")
+def ring(spark):
+    # range-backed inputs carry size statistics, so pageRank's out-degree
+    # join plans as a static broadcast: any sort-merge join left in the
+    # captured plans would be a superstep join
+    v = spark.range(20)
+    e = spark.range(40).select(
+        (F.col("id") % 20).alias("src"), ((F.col("id") * 7 + 1) % 20).alias("dst")
+    )
+    return GraphFrame(v, e)
+
+
+def _executed_plans(action) -> str:
+    """Physical plans of every action ``action`` runs, in-loop ones too."""
+    from tools.dump_plans import PlanCapture
+
+    with PlanCapture() as cap:
+        action()
+    plans = "\n".join(cap.plans)
+    # the superstep joins (keyed on the edge source) were seen
+    assert "_pregel_edge_src" in plans
+    return plans
+
+
+def _dst_state_sum(ring):
+    # messages read dst state, so every superstep also joins it
+    return (
+        ring.pregel.withVertexColumn(
+            "x", F.lit(1.0), F.coalesce(Pregel.msg(), F.lit(0.0))
+        )
+        .sendMsgToDst(Pregel.src("x") + Pregel.dst("x"))
+        .aggMsgs(F.sum(Pregel.msg()))
+    )
+
+
+def test_fused_supersteps_hash_join_without_sort(ring):
+    plans = _executed_plans(
+        lambda: ring.pageRank(resetProbability=0.15, maxIter=3).vertices.count()
+    )
+    assert "ShuffledHashJoin" in plans
+    assert "SortMergeJoin" not in plans
+
+    plans = _executed_plans(lambda: _dst_state_sum(ring).setMaxIter(3).run().count())
+    assert "Inner, BuildLeft" in plans  # src state ⋈ edges
+    assert "Inner, BuildRight" in plans  # ⋈ dst state
+    assert "LeftOuter, BuildRight" in plans  # message join-back
+    assert "SortMergeJoin" not in plans
+
+
+def test_voting_supersteps_carry_no_shuffle_hash_join(ring):
+    plans = _executed_plans(
+        lambda: _dst_state_sum(ring).setMaxIter(3).setEarlyStopping(True).run().count()
+    )
+    assert "ShuffledHashJoin" not in plans

@@ -4,6 +4,7 @@ reachability, triangle enumeration, iterative k-core peeling)."""
 
 import itertools
 
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -411,6 +412,68 @@ def test_eigenvector_matches_power_iteration(spark, edges, iters):
             assert got[i] is None  # try_divide by zero norm
         else:
             assert abs(got[i] - want[i]) < 1e-9, (i, got[i], want[i], sorted(edges))
+
+
+def _hub_skewed_edges(num_vertices, num_edges, seed):
+    """Simple directed ``floor(V·u³)`` graph: vertex 0 is the hub."""
+    rng = np.random.default_rng(seed)
+    src = np.floor(num_vertices * rng.random(num_edges) ** 3).astype(np.int64)
+    dst = np.floor(num_vertices * rng.random(num_edges) ** 3).astype(np.int64)
+    keep = src != dst
+    key = np.unique(src[keep] * num_vertices + dst[keep])
+    return key // num_vertices, key % num_vertices
+
+
+def _pagerank_oracle(n, src, dst, weight, alpha, source, iters):
+    """Power iteration with the recipe's semantics: rank held by vertices
+    without (positive) out-weight is not redistributed."""
+    out_w = np.bincount(src, weights=weight, minlength=n)
+    reset = np.full(n, alpha / n)
+    rank = np.full(n, 1.0 / n)
+    if source is not None:
+        reset = np.zeros(n)
+        reset[source] = alpha
+        rank = np.zeros(n)
+        rank[source] = 1.0
+    for _ in range(iters):
+        share = rank[src] * weight / out_w[src]
+        rank = reset + (1.0 - alpha) * np.bincount(dst, weights=share, minlength=n)
+    return rank
+
+
+@pytest.fixture(scope="module")
+def hub_skewed(spark):
+    n = 2000
+    src, dst = _hub_skewed_edges(n, 12_000, seed=7)
+    weight = 1.0 + (np.arange(len(src)) * 2654435761 % 97) / 8.0
+    v = spark.createDataFrame([(i,) for i in range(n)], ["id"])
+    e = spark.createDataFrame(
+        list(zip(src.tolist(), dst.tolist(), weight.tolist())), ["src", "dst", "w"]
+    )
+    return n, src, dst, weight, GraphFrame(v, e)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("mode", ["uniform", "personalized", "weighted"])
+@pytest.mark.parametrize("iters", [1, 2, 3, 4])
+def test_pagerank_matches_power_iteration_on_hub_skewed_graph(hub_skewed, mode, iters):
+    n, src, dst, weight, g = hub_skewed
+    source = 3 if mode == "personalized" else None
+    weighted = mode == "weighted"
+    ranks = g.pageRank(
+        resetProbability=0.15,
+        sourceId=source,
+        maxIter=iters,
+        weightCol="w" if weighted else None,
+    ).vertices
+    got = np.zeros(n)
+    for r in ranks.collect():
+        got[r["id"]] = r["pagerank"]
+    want = _pagerank_oracle(
+        n, src, dst, weight if weighted else np.ones(len(src)), 0.15, source, iters
+    )
+    # the join strategy changes the order of the sums, not their value
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=0)
 
 
 def _triad_oracle(edges):
