@@ -4,9 +4,12 @@ Implements the two-phase algorithm (Kiveris et al., "Connected Components
 in MapReduce and Beyond") following the reference's AQE variant
 (/root/reference/core/src/main/scala/org/graphframes/lib/TwoPhase.scala:331-443):
 plain shuffle joins with AQE left on to handle skew at runtime, eager
-checkpoints every N iterations to cut lineage, convergence detected by a
-stable Decimal(38,0) sum of min-neighbor assignments (a cheap aggregate
-instead of DataFrame equality).
+checkpoints every N iterations to cut lineage.
+
+Exit rule (a deviation from the reference, same results): the loop stops
+at the first convergence probe that finds the edge set a star forest
+centred on each component's minimum (proof at ``_min_nbr_stats``), one
+no-op iteration before the reference's repeated-checksum rule.
 
 Scale notes: each iteration is two join+agg rounds over the shrinking
 edge set; input hub skew is handled by AQE skew-join; the skew the
@@ -126,14 +129,27 @@ def _min_nbrs(ee: DataFrame, with_cnt: bool = False) -> DataFrame:
 
 
 def _min_nbr_stats(min_nbrs: DataFrame):
-    """(checksum, total_cnt) in ONE action over the persisted aggregate:
-    the Decimal(38,0) assignment sum (the convergence probe) plus the
-    total symmetrized row count (the denominator for giant-star
-    detection — an even share per shuffle partition is total/n_part)."""
+    """(total_cnt, non_star) in ONE action over the persisted aggregate:
+    the total symmetrized row count (the denominator for giant-star
+    detection — an even share per shuffle partition is total/n_part)
+    and the number of vertices that have a smaller neighbour
+    (``min_nbr < src``) and more than one neighbour.
+
+    ``non_star == 0`` exactly when the edge set is a star forest centred
+    on each component's minimum, the loop's exit (the reference instead
+    waits for the Decimal(38,0) sum of min-neighbour assignments to
+    repeat, one no-op iteration later). If: a vertex with
+    ``min_nbr == src`` has only larger neighbours; each of those has a
+    smaller neighbour, so by the rule it has exactly one neighbour, that
+    vertex — so its component is a star centred on it, its minimum. Only
+    if: every leaf of such a star has one neighbour. ``min_nbrs`` must be
+    built from an edge set oriented ``src < dst`` and deduplicated, as
+    the loop's always is, so ``cnt`` is the degree."""
     row = min_nbrs.select(
-        F.sum(F.col(MIN_NBR).cast("decimal(38,0)")), F.sum(F.col(CNT))
+        F.sum(F.col(CNT)),
+        F.count_if((F.col(MIN_NBR) < F.col(SRC)) & (F.col(CNT) > 1)),
     ).first()
-    return row[0], row[1] or 0
+    return row[0] or 0, row[1]
 
 
 # Defensive cap on the per-iteration giant-star hub set (the math bound
@@ -296,9 +312,12 @@ def incremental_connected_components(
     # never exceed the member id — numeric order on integral ids,
     # lexicographic on strings; a necessary condition for labels produced
     # by connectedComponents / useLabelsAsComponents=True) rides the same
-    # materialization job via Observation: zero extra scans.
+    # materialization job via Observation: zero extra scans. Both cuts go
+    # through the harness, so spark.graphframes.useLocalCheckpoints=false
+    # selects reliable checkpoints here as it does in the loop they feed.
     from pyspark.sql import Observation
 
+    harness = IterationHarness(graph.spark)
     guard = Observation()
     assign = (
         graph.vertices.select(ID)
@@ -313,8 +332,8 @@ def incremental_connected_components(
             ID,
             F.coalesce(F.col("_prev_comp"), F.col(ID)).alias("_comp"),
         )
-        .localCheckpoint(eager=True)
     )
+    assign = harness.checkpoint(assign, eager=True)
     if (guard.get.get("bad_labels") or 0) > 0:
         raise GraphFramesError(
             "prev_components violates the min-member-id invariant "
@@ -336,14 +355,14 @@ def incremental_connected_components(
         .select(F.col("_csrc").alias(SRC), F.col("_cdst").alias(DST))
         .filter(F.col(SRC) != F.col(DST))
         .distinct()
-        # delta-sized; scanned by touched (twice) and the contracted CC.
-        # LAZY checkpoint: the plan is cut to a leaf immediately, and the
-        # contracted CC's first convergence-stats action (which reads
-        # these edges) materializes it in the same job — one fewer
-        # delta-sized action per incremental round (an eager arm read
-        # 4.15 s vs 4.41 s, 7/10 pairs, inside noise: BENCH_knob_retire.json).
-        .localCheckpoint(eager=False)
     )
+    # delta-sized; scanned by touched (twice) and the contracted CC.
+    # LAZY checkpoint: the plan is cut to a leaf immediately, and the
+    # contracted CC's first convergence-stats action (which reads these
+    # edges) materializes it in the same job — one fewer delta-sized
+    # action per incremental round (an eager arm read 4.15 s vs 4.41 s,
+    # 7/10 pairs, inside noise: BENCH_knob_retire.json).
+    mapped = harness.checkpoint(mapped, eager=False)
     # contracted graph: only components touched by a cross-component new
     # edge need to participate; untouched components keep their label
     touched = (
@@ -403,6 +422,9 @@ def connected_components(
     keeps handling everything else. Set ``giantStarFactor=0`` to
     disable. Results are identical either way — only the join strategy
     for the detected keys changes.
+
+    The two-phase loop stops once the edge set is a star forest centred
+    on each component's minimum (see ``_min_nbr_stats``).
     """
     from graphframes_spark.util import GraphFramesError
 
@@ -506,11 +528,12 @@ def _two_phase_loop(
     ee = harness.persist(ee)
 
     min_nbrs1 = harness.persist(_min_nbrs(ee, with_cnt=True))
-    prev_sum, total_cnt = _min_nbr_stats(min_nbrs1)
-    giant_hubs = _detect_giants(min_nbrs1, total_cnt)
+    total_cnt, non_star = _min_nbr_stats(min_nbrs1)
+    # no edges at all, or already a star forest centred on the minima
+    converged = non_star == 0
+    giant_hubs = [] if converged else _detect_giants(min_nbrs1, total_cnt)
     harness.rotate()  # ee, min_nbrs1 become "previous"; kept until round ends
 
-    converged = prev_sum is None  # no edges at all
     for iteration in harness.iterations(max_iter):
         if converged:
             break
@@ -584,18 +607,16 @@ def _two_phase_loop(
         ee = harness.persist(new_ee)
 
         min_nbrs1 = harness.persist(_min_nbrs(ee, with_cnt=True))
-        curr_sum, total_cnt = _min_nbr_stats(min_nbrs1)
-        if curr_sum == prev_sum:
-            converged = True
-        else:
+        total_cnt, non_star = _min_nbr_stats(min_nbrs1)
+        converged = non_star == 0  # ee is a star forest centred on the minima
+        if not converged:
             giant_hubs = _detect_giants(min_nbrs1, total_cnt)
-        prev_sum = curr_sum
         harness.rotate()
 
     if not converged:
         warnings.warn(
-            f"connectedComponents exited at max_iter={max_iter} without the "
-            "convergence checksum stabilizing; component ids may be incomplete.",
+            f"connectedComponents exited at max_iter={max_iter} before the edge "
+            "set became a star forest; component ids may be incomplete.",
             RuntimeWarning,
         )
 

@@ -1,3 +1,5 @@
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,6 +71,117 @@ def test_connected_components_labels(friends):
     }
     assert comp["a"] == "a"  # min original id of the big component
     assert comp["g"] == "g"
+
+
+def _union_find_min_labels(n, edges):
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in range(n)}
+
+
+def _mixed_components(seed):
+    """Seeded disjoint union of every component shape the two-phase exit
+    rule distinguishes: (vertex count, edge list)."""
+    rng = random.Random(seed)
+    edges = []
+    nxt = 0
+
+    def block(k):
+        nonlocal nxt
+        ids = list(range(nxt, nxt + k))
+        nxt += k
+        return ids
+
+    for _ in range(4):  # stars centred on their minimum
+        c, *leaves = block(rng.randint(2, 6))
+        edges += [(c, x) if rng.random() < 0.5 else (x, c) for x in leaves]
+    for _ in range(4):  # stars whose centre is not the minimum
+        ids = block(rng.randint(3, 6))
+        c = ids[rng.randint(1, len(ids) - 1)]
+        edges += [(c, x) for x in ids if x != c]
+    for _ in range(3):  # single edges: both orientations, duplicates
+        a, b = block(2)
+        edges += [(a, b), (b, a), (a, b)]
+    a, b = block(2)  # a single edge given only as larger -> smaller
+    edges.append((b, a))
+    for _ in range(3):  # paths in a shuffled vertex order
+        ids = block(rng.randint(3, 7))
+        rng.shuffle(ids)
+        edges += list(zip(ids, ids[1:]))
+    for _ in range(2):  # cycles
+        ids = block(rng.randint(3, 7))
+        rng.shuffle(ids)
+        edges += list(zip(ids, ids[1:] + ids[:1]))
+    ids = block(5)  # clique
+    edges += [(x, y) for x in ids for y in ids if x < y]
+    block(4)  # isolated vertices
+    rng.shuffle(edges)
+    return nxt, edges
+
+
+def _count_cc_probes(monkeypatch):
+    import graphframes_spark.lib.connected_components as cc_mod
+
+    calls = []
+    orig = cc_mod._min_nbr_stats
+
+    def spy(min_nbrs):
+        calls.append(1)
+        return orig(min_nbrs)
+
+    monkeypatch.setattr(cc_mod, "_min_nbr_stats", spy)
+    return calls
+
+
+def _cc_labels(spark, n, edges):
+    from graphframes_spark import GraphFrame
+
+    g = GraphFrame(
+        spark.range(n), spark.createDataFrame(edges, "src long, dst long")
+    )
+    return {r["id"]: r["component"] for r in g.connectedComponents().collect()}
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_connected_components_mixed_shapes_match_union_find(spark, seed):
+    n, edges = _mixed_components(seed)
+    assert _cc_labels(spark, n, edges) == _union_find_min_labels(n, edges)
+
+
+def test_connected_components_star_forest_exits_at_first_probe(spark, monkeypatch):
+    """Stars centred on their minima are already the fixpoint: the initial
+    convergence probe sees it and the loop never runs."""
+    edges = [(0, 1), (2, 0), (0, 3), (4, 5), (4, 6), (7, 8)]
+    calls = _count_cc_probes(monkeypatch)
+    assert _cc_labels(spark, 10, edges) == _union_find_min_labels(10, edges)
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize(
+    "n, edges",
+    [
+        (5, [(0, 1), (1, 2), (2, 3), (3, 4)]),
+        (6, [(i, (i + 1) % 6) for i in range(6)]),
+    ],
+    ids=["path5", "cycle6"],
+)
+def test_connected_components_probe_count_pinned(spark, monkeypatch, n, edges):
+    """Probes = the initial one plus one per iteration. The reference's
+    repeated-checksum rule took 4 on both graphs; the star-forest exit
+    skips its no-op confirmation iteration and takes 3."""
+    calls = _count_cc_probes(monkeypatch)
+    assert _cc_labels(spark, n, edges) == {v: 0 for v in range(n)}
+    assert len(calls) == 3
 
 
 def test_shortest_paths(friends):

@@ -1590,6 +1590,47 @@ def test_incremental_cc_string_ids_empty_delta_and_new_singleton(spark):
     assert inc == {"x": "x", "y": "x", "z": "z"}
 
 
+def test_incremental_cc_honors_reliable_checkpoint_conf(spark, tmp_path, monkeypatch):
+    """With spark.graphframes.useLocalCheckpoints=false the incremental
+    update's lineage cuts write reliable checkpoints to the checkpoint dir
+    (no local checkpoint runs at all), and the result equals the default
+    (local) run."""
+    v = spark.range(0, 10).select("id")
+    e_old = spark.createDataFrame([(0, 1), (1, 2), (3, 4), (5, 6)], ["src", "dst"])
+    prev = GraphFrame(v, e_old).connectedComponents()
+    e_new = spark.createDataFrame([(2, 3), (8, 5), (4, 9), (9, 6)], ["src", "dst"])
+    g = GraphFrame(v, e_new)
+
+    def labels():
+        return {r["id"]: r["component"] for r in g.incrementalConnectedComponents(prev).collect()}
+
+    local = labels()
+    key = "spark.graphframes.useLocalCheckpoints"
+    sc = spark.sparkContext
+    ckpt = tmp_path / "ckpt"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    sc.setCheckpointDir(str(ckpt))
+
+    def no_local_checkpoint(*args, **kwargs):
+        raise AssertionError("localCheckpoint with useLocalCheckpoints=false")
+
+    monkeypatch.setattr(type(v), "localCheckpoint", no_local_checkpoint)
+    try:
+        reliable = labels()
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+        monkeypatch.undo()
+    assert sc.getCheckpointDir() is None
+    assert reliable == local
+    assert local == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 0, 6: 0, 7: 7, 8: 0, 9: 0}
+    assert any(p.is_file() for p in ckpt.rglob("*"))
+
+
 def test_incremental_cc_string_ids_rejects_surrogate_domain(spark):
     """A long-typed assignment (the surrogate-domain output of a plain
     connectedComponents run on string ids) must be rejected loudly:

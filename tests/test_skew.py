@@ -137,12 +137,31 @@ def test_bloom_decontaminate_hot_shingle(spark):
     assert out.count() == n
 
 
-def test_cc_manual_skew_join_matches_aqe(spark, hub_graph):
+@pytest.fixture()
+def skew_join_calls(monkeypatch):
+    """Hub-key lists ``_skewed_join`` was called with. A star forest
+    centred on its minima exits CC at the first probe and never joins,
+    so the skew-path tests below assert the loop really ran this path."""
+    import graphframes_spark.lib.connected_components as cc_mod
+
+    calls = []
+    orig = cc_mod._skewed_join
+
+    def spy(a, b, hubs):
+        calls.append(list(hubs))
+        return orig(a, b, hubs)
+
+    monkeypatch.setattr(cc_mod, "_skewed_join", spy)
+    return calls
+
+
+def test_cc_manual_skew_join_matches_aqe(spark, hub_graph, skew_join_calls):
     """Manual broadcast/skew-join CC mode (broadcast_threshold > 0,
     reference TwoPhase.scala:160-173): hub 0 exceeds the threshold, so
     its star-contraction joins go through the broadcast branch. The
     component PARTITION must equal the AQE mode's."""
     manual = hub_graph.connectedComponents(broadcastThreshold=1000)
+    assert [0] in skew_join_calls
     aqe = hub_graph.connectedComponents()
     assert manual.select("component").distinct().count() == 1
     joined = manual.withColumnRenamed("component", "m").join(
@@ -202,13 +221,16 @@ def giant_star_conf(spark):
             spark.conf.set(k, v)
 
 
-def test_cc_giant_star_hybrid_matches_plain_aqe(spark, hub_graph, giant_star_conf):
+def test_cc_giant_star_hybrid_matches_plain_aqe(
+    spark, hub_graph, giant_star_conf, skew_join_calls
+):
     """Round-10 giant-star hybrid: with the detection thresholds forced
     low, hub 0 (degree 10^5) is detected from the convergence probe's
     aggregate and its large-star join rows take the broadcast route
     while AQE handles the rest. The component partition must be
     identical to both the plain-AQE run and the graphx reference."""
     hybrid = hub_graph.connectedComponents()
+    assert skew_join_calls == [[0]]
     assert hybrid.select("component").distinct().count() == 1
     gx = hub_graph.connectedComponents(algorithm="graphx")
     joined = hybrid.withColumnRenamed("component", "h").join(
@@ -217,10 +239,12 @@ def test_cc_giant_star_hybrid_matches_plain_aqe(spark, hub_graph, giant_star_con
     assert joined.filter(F.col("h") != F.col("g")).count() == 0
 
 
-def test_cc_giant_star_hybrid_multi_component(spark, giant_star_conf):
+def test_cc_giant_star_hybrid_multi_component(spark, giant_star_conf, skew_join_calls):
     """Forced-low thresholds on a multi-component graph with isolated
     vertices: several keys qualify as 'giants' at once; the partition
-    must stay exact."""
+    must stay exact. Each hub holds about a quarter of the symmetrized
+    rows, so with 4 shuffle partitions neither would exceed the factor-1
+    share; 8 partitions put both above it."""
     v = spark.range(0, 40)
     edges = (
         # two stars big enough to trip the 10-row floor after symmetrize
@@ -230,7 +254,14 @@ def test_cc_giant_star_hybrid_multi_component(spark, giant_star_conf):
     )
     e = spark.createDataFrame(edges, ["src", "dst"])
     g = GraphFrame(v, e)
-    out = g.connectedComponents()
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        out = g.connectedComponents()
+    finally:
+        spark.conf.set(key, saved)
+    assert [sorted(h) for h in skew_join_calls] == [[0, 20]]
     comps = {}
     for r in out.collect():
         comps.setdefault(r["component"], set()).add(r["id"])
@@ -273,19 +304,10 @@ def test_giant_star_hub_detection_bounds(spark):
     assert any("truncating" in str(w.message) for w in caught)
 
 
-def test_cc_giant_star_detection_disable_knob(spark, hub_graph):
+def test_cc_giant_star_detection_disable_knob(spark, hub_graph, skew_join_calls):
     """giantStarFactor=0 must disable detection entirely (plain AQE joins)
     even when the floor is forced low enough to trigger — the documented
     escape hatch — and results stay exact."""
-    import graphframes_spark.lib.connected_components as cc_mod
-
-    calls = []
-    orig = cc_mod._skewed_join
-
-    def spy(a, b, hubs):
-        calls.append(list(hubs))
-        return orig(a, b, hubs)
-
     keys = {
         "spark.graphframes_spark.cc.giantStarFloor": "10",
         "spark.graphframes_spark.cc.giantStarFactor": "0",
@@ -293,13 +315,11 @@ def test_cc_giant_star_detection_disable_knob(spark, hub_graph):
     saved = {k: spark.conf.get(k, None) for k in keys}
     for k, v in keys.items():
         spark.conf.set(k, v)
-    cc_mod._skewed_join = spy
     try:
         out = hub_graph.connectedComponents()
         assert out.select("component").distinct().count() == 1
-        assert calls == [], "factor=0 must not route any key through broadcast"
+        assert skew_join_calls == [], "factor=0 must not route any key through broadcast"
     finally:
-        cc_mod._skewed_join = orig
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
