@@ -346,17 +346,31 @@ def q_cc_incremental_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cc_skew_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manual broadcast/skew-join connected components (reference
-    TwoPhase.scala:160-173, GraphFrame.scala:1106-1126): AQE disabled,
-    per-key degree counts ride the min-neighbor aggregates, keys above
-    the threshold are broadcast-joined. Threshold 20 selects only the
-    heaviest customers (3 hubs at sf0.01, 19 at sf0.1; TPC-H order
-    counts top out ~25) so the hub set stays bounded at any SF while the
-    broadcast branch is genuinely exercised. Same fixture and oracle as
-    ``connected_components`` — the mode must produce the identical
-    component assignment."""
+    """Connected components through the broadcast skew path (reference
+    TwoPhase.scala:160-173, GraphFrame.scala:1106-1126): the customer →
+    order graph plus an edge from each order to the customer's next
+    order, so the graph is no longer a star forest on its minima and the
+    contraction loop iterates. ``broadcastThreshold=20`` is the hub
+    cutoff: customers above 20 orders (TPC-H order counts top out ~25)
+    are broadcast-joined in the large-star step, with AQE on, while the
+    rest stay on the shuffle join. The chain edges stay inside a
+    customer, so fixture components and oracle equal
+    ``connected_components``'s."""
     g = _customer_order_graph(spark, sf_dir)
-    return g.connectedComponents(broadcastThreshold=20).select("id", "component")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    prev_order = F.lag("o_orderkey").over(
+        Window.partitionBy("o_custkey").orderBy("o_orderkey")
+    )
+    chain = orders.select(
+        (prev_order + ORDER_OFFSET).alias("src"),
+        (F.col("o_orderkey") + ORDER_OFFSET).alias("dst"),
+    ).filter(F.col("src").isNotNull())
+    e = g.edges.select("src", "dst").unionByName(chain)
+    return (
+        GraphFrame(g.vertices, e)
+        .connectedComponents(broadcastThreshold=20)
+        .select("id", "component")
+    )
 
 
 def _chain_landmark(spark: SparkSession, sf_dir: str) -> int:
@@ -1787,18 +1801,17 @@ def q_kmin_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-OUTPUT oracle for the MIS engine in deterministic mode
-    (lib/mis.py, md5 nomination draws — round 8): on a perfect matching
-    over customers (edges (2k-1, 2k)) the marking probability provably
-    stays 1/2 every round (effective degree = partner's 1/2 < 2, and
-    2p > 1/2 caps), so the Ghaffari dynamics reduce to: the pair settles
+    """FULL-OUTPUT oracle for the MIS engine (lib/mis.py, md5 nomination
+    draws): on a perfect matching over customers (edges (2k-1, 2k)) the
+    marking probability provably stays 1/2 every round (effective degree
+    = partner's 1/2 < 2, and 2p > 1/2 caps), so the Ghaffari dynamics
+    reduce to: the pair settles
     at the first round where exactly one endpoint's md5 draw nominates,
     and that nominator joins the MIS — closed-form in SQL over the same
     md5 primitive. This exercises the real iterative engine (nomination,
     neighbor veto, isolated-join, arena removal, per-round checkpoints)
-    with every draw replayed bit-for-bit by DuckDB; the randomized
-    rand() mode stays pytest-covered and q_mis_regions keeps the
-    seed-independent invariant oracle on the clique graph."""
+    with every draw replayed bit-for-bit by DuckDB; q_mis_regions keeps
+    the seed-independent invariant oracle on the clique graph."""
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
     v = customer.select(F.col("c_custkey").cast("long").alias("id"))
     e = (
@@ -1807,9 +1820,7 @@ def q_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(v.select(F.col("id").alias("dst")), F.col("src") + 1 == F.col("dst"))
     )
     g = GraphFrame(v, e)
-    return g.maximalIndependentSet(seed=7, maxIter=64, deterministic=True).select(
-        "id"
-    )
+    return g.maximalIndependentSet(seed=7, maxIter=64).select("id")
 
 
 def q_mis_regions(spark: SparkSession, sf_dir: str) -> DataFrame:

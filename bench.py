@@ -10,9 +10,10 @@ back-to-back means + a noisy sandbox cannot distinguish a real regression
 from a transient load spike (this bit round 3: a 39% phantom regression).
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_WARMUP (default 1),
-SPARK_GRAFT_REPEATS (default 3), SPARK_GRAFT_MAX_RETRIES (default 3,
-per query; 0 disables weather retries).
+SPARK_GRAFT_CPUS (default: the cores this process may run on),
+SPARK_GRAFT_WARMUP (default 1), SPARK_GRAFT_REPEATS (default 3),
+SPARK_GRAFT_MAX_RETRIES (default 3, per query; 0 disables weather
+retries).
 
 Weather-proofing (round 12): round 11's driver run was destroyed by
 mid-run hypervisor steal (steal_cores_max 5.18, cotenant_cores_max
@@ -305,7 +306,7 @@ def compact_line(compact: dict, timings: dict[str, float]) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     warmup = int(os.environ.get("SPARK_GRAFT_WARMUP", "1"))
     repeats = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
     max_retries = int(os.environ.get("SPARK_GRAFT_MAX_RETRIES", "3"))

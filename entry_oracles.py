@@ -624,7 +624,8 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT o_orderkey + {ORDER_OFFSET}, o_custkey FROM orders
         """,
-        # manual skew-join mode must produce the identical assignment
+        # the chained customer-order graph has the same components, and a
+        # broadcast hub cutoff must not change the assignment
         "cc_skew_broadcast": f"""
             SELECT c_custkey AS id, c_custkey AS component FROM customer
             UNION ALL
@@ -1439,10 +1440,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT n_regionkey AS region, CAST(1 AS BIGINT) AS n_selected
             FROM nation GROUP BY n_regionkey
         """,
-        # deterministic-mode MIS on the customer perfect matching: p is
-        # provably 1/2 every round, so pair (a, a+1) settles at the first
-        # round where exactly one endpoint's md5 draw is <= 1/2, and the
-        # nominator wins; unpaired vertices are isolated -> join round 1.
+        # MIS on the customer perfect matching: p is provably 1/2 every
+        # round, so pair (a, a+1) settles at the first round where exactly
+        # one endpoint's md5 draw is <= 1/2, and the nominator wins;
+        # unpaired vertices are isolated -> join round 1.
         # Same draw primitive as lib/mis.py _det_draw (seed 7, rounds
         # 1..64): first 12 md5 hex chars over 16^12.
         "mis": """

@@ -1038,12 +1038,10 @@ class GraphFrame:
             self, checkpoint_interval, use_local_checkpoints, storage_level
         )
 
-    def maximalIndependentSet(
-        self, seed: int = 42, maxIter: int = 100, deterministic: bool = False
-    ) -> DataFrame:
+    def maximalIndependentSet(self, seed: int = 42, maxIter: int = 100) -> DataFrame:
         from graphframes_spark.lib.mis import maximal_independent_set
 
-        return maximal_independent_set(self, seed, maxIter, deterministic)
+        return maximal_independent_set(self, seed, maxIter)
 
     maximal_independent_set = maximalIndependentSet
 

@@ -5,15 +5,14 @@ AggregateNeighbors, MIS and RandomizedContraction
 (/root/reference/core/src/main/scala/org/graphframes/lib/Pregel.scala:392-545,
 lib/TwoPhase.scala:236-304, lib/mixins.scala:28-121): persist the current
 round, unpersist the previous one, checkpoint every N iterations so the
-lineage/plan doesn't grow without bound, and guard AQE around randomized
-steps. This module centralizes that skeleton so no algorithm can forget it
-— forgetting checkpointing is the #1 scale killer for iterative DataFrame
-programs (driver hangs analyzing exponentially-grown plans).
+lineage/plan doesn't grow without bound. This module centralizes that
+skeleton so no algorithm can forget it — forgetting checkpointing is the
+#1 scale killer for iterative DataFrame programs (driver hangs analyzing
+exponentially-grown plans).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,23 +40,6 @@ def shuffle_partitions(spark: SparkSession, default: int = 200) -> int:
             return max(int(spark.sparkContext.defaultParallelism), 1)
         except Exception:
             return max(default, 1)
-
-
-@contextmanager
-def aqe_disabled(spark: SparkSession) -> Iterator[None]:
-    """Disable AQE for the duration of a randomized computation.
-
-    AQE may re-execute stages during re-planning; with ``rand()``-dependent
-    logic that silently changes results (reference disables AQE in
-    MaximalIndependentSet.scala:104-107 and TwoPhase.scala:189-192).
-    """
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def ensure_checkpoint_dir(spark: SparkSession) -> None:

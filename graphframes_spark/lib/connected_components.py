@@ -17,11 +17,11 @@ ALGORITHM ITSELF creates — star contraction funnels the giant
 component's edges onto its minimum id, which AQE cannot split because
 the cached min-neighbor side presents no live shuffle stage — is
 handled by the giant-star hybrid: keys whose degree exceeds
-max(floor, factor·total/n_part) are detected from the aggregate the
-convergence probe already computes and routed through a broadcast
-join, everything else stays on the plain AQE shuffle join. The
-surrogate-long-ID mapping keeps shuffle keys to 8 bytes regardless of
-the user ID type.
+``broadcastThreshold`` when set, else max(floor, factor·total/n_part),
+are detected from the aggregate the convergence probe already computes
+and routed through a broadcast join, everything else stays on the plain
+AQE shuffle join. The surrogate-long-ID mapping keeps shuffle keys to 8
+bytes regardless of the user ID type.
 """
 
 from __future__ import annotations
@@ -46,15 +46,13 @@ CNT = "cnt"
 
 
 def _skewed_join(a: DataFrame, b: DataFrame, hubs: list) -> DataFrame:
-    """Manual skew-aware join on ``src`` (reference
-    GraphFrame.scala:1106-1126 / TwoPhase.scala:160-173): rows whose key
-    is a driver-collected high-degree hub go through a broadcast join,
-    the rest through a plain shuffle join, results unioned. Hub
-    membership is tested with broadcast semi/anti joins against the
-    (small) hub set rather than an ``isin`` literal list — the Catalyst
-    plan stays constant-size however many keys exceed the threshold.
-    ``b`` must not carry columns beyond (src, min_nbr[, cnt]); only
-    (src, min_nbr) survive."""
+    """Skew-aware join on ``src`` (reference GraphFrame.scala:1106-1126 /
+    TwoPhase.scala:160-173): rows whose key is a driver-collected hub go
+    through a broadcast join, the rest through a plain shuffle join,
+    results unioned. Hub membership is tested with broadcast semi/anti
+    joins against the (small) hub set rather than an ``isin`` literal
+    list — the Catalyst plan stays constant-size however many keys
+    qualify. Only (src, min_nbr) of ``b`` survive."""
     b = b.select(SRC, MIN_NBR)
     if not hubs:
         return a.join(b, on=SRC)
@@ -69,39 +67,6 @@ def _skewed_join(a: DataFrame, b: DataFrame, hubs: list) -> DataFrame:
     return hash_joined.unionAll(broadcast_joined)
 
 
-# Hard cap on the driver-collected hub set. The hubs are broadcast to
-# every executor as a hash relation; a threshold so low that millions of
-# keys qualify would OOM the driver/broadcast long before the join runs.
-# Failing loudly here converts a silent OOM into an actionable message
-# (raise the threshold, or use the default AQE mode which handles skew
-# without any driver collect).
-MAX_HUBS = 1_000_000
-
-
-def _collect_hubs(min_nbrs_with_cnt: DataFrame, broadcast_threshold: int) -> list:
-    """Driver-side set of high-degree join keys (bounded: only keys with
-    degree above the threshold; the reference collects the same set).
-    Raises if more than ``MAX_HUBS`` keys qualify — a pathologically low
-    threshold would otherwise collect a graph-sized key set."""
-    from graphframes_spark.util import GraphFramesError
-
-    hubs = [
-        r[0]
-        for r in min_nbrs_with_cnt.filter(F.col(CNT) > broadcast_threshold)
-        .select(SRC)
-        .limit(MAX_HUBS + 1)
-        .collect()
-    ]
-    if len(hubs) > MAX_HUBS:
-        raise GraphFramesError(
-            f"manual skew-join mode: more than {MAX_HUBS} keys exceed "
-            f"broadcast_threshold={broadcast_threshold}; the hub set must "
-            "be small enough to broadcast. Raise the threshold, or use "
-            "the default AQE mode (broadcast_threshold=-1)."
-        )
-    return hubs
-
-
 def _symmetrize(ee: DataFrame) -> DataFrame:
     return ee.select(
         F.explode(
@@ -113,17 +78,14 @@ def _symmetrize(ee: DataFrame) -> DataFrame:
     ).select(F.col("_edge." + SRC).alias(SRC), F.col("_edge." + DST).alias(DST))
 
 
-def _min_nbrs(ee: DataFrame, with_cnt: bool = False) -> DataFrame:
-    """(src, min_nbr[, cnt]) where min_nbr = min(N(src) ∪ {src}); ``cnt``
-    (the degree, used to find hub keys in manual skew-join mode) rides
-    the same aggregate for free."""
-    aggs = [F.min(DST).alias(MIN_NBR)]
-    if with_cnt:
-        aggs.append(F.count("*").alias(CNT))
+def _min_nbrs(ee: DataFrame) -> DataFrame:
+    """(src, min_nbr, cnt) where min_nbr = min(N(src) ∪ {src}); ``cnt``
+    (the degree, read by the convergence probe and giant-star
+    detection) rides the same aggregate for free."""
     return (
         _symmetrize(ee)
         .groupBy(SRC)
-        .agg(*aggs)
+        .agg(F.min(DST).alias(MIN_NBR), F.count("*").alias(CNT))
         .withColumn(MIN_NBR, F.least(F.col(SRC), F.col(MIN_NBR)))
     )
 
@@ -154,7 +116,8 @@ def _min_nbr_stats(min_nbrs: DataFrame):
 
 # Defensive cap on the per-iteration giant-star hub set (the math bound
 # is min(total/threshold, n_part/factor) keys — a handful — but a
-# misconfigured floor shouldn't be able to broadcast millions of keys).
+# misconfigured floor or broadcastThreshold shouldn't be able to
+# broadcast millions of keys).
 MAX_GIANT_HUBS = 4096
 
 
@@ -183,9 +146,9 @@ def _giant_star_hubs(
         warnings.warn(
             f"giant-star detection matched more than {MAX_GIANT_HUBS} keys at "
             f"threshold {threshold}; truncating to the {MAX_GIANT_HUBS} heaviest "
-            "(the rest stay on the shuffle path). Check cc.giantStarFactor/"
-            "cc.giantStarFloor — a threshold this low broadcasts far more keys "
-            "than skew mitigation needs.",
+            "(the rest stay on the shuffle path). Check broadcastThreshold or "
+            "cc.giantStarFactor/cc.giantStarFloor — a threshold this low "
+            "broadcasts far more keys than skew mitigation needs.",
             stacklevel=2,
         )
         rows = rows[:MAX_GIANT_HUBS]
@@ -397,31 +360,23 @@ def connected_components(
     TwoPhase.scala:331-443) and ``"graphx"`` (min-id-propagation Pregel,
     graphx/lib/ConnectedComponents.scala:25-90).
 
-    ``broadcast_threshold``: ``-1`` (default) leaves skew handling to AQE
-    — the mode the reference recommends (5-8x faster per its own
-    benchmarks). A positive value selects the reference's MANUAL
-    skew-join mode (TwoPhase.scala:160-173, GraphFrame.scala:1106-1126):
-    AQE is disabled for the duration, per-key degree counts ride the
-    min-neighbor aggregates, keys with degree above the threshold are
-    collected to the driver, and each star-contraction join is split
-    into a shuffle join for normal keys unioned with a broadcast join
-    for hub keys. Kept primarily as the measured baseline for the AQE
-    ablation (BENCH_ablation). Two-phase algorithm only.
-
-    The default AQE mode additionally runs the GIANT-STAR HYBRID: keys
-    whose symmetrized degree exceeds
-    ``max(spark.graphframes_spark.cc.giantStarFloor (1e6),
+    Skew is left to AQE, which stays on, plus the GIANT-STAR HYBRID:
+    keys whose symmetrized degree exceeds a hub cutoff are detected
+    each iteration from the convergence probe's aggregate (no extra
+    shuffle; one bounded collect) and their large-star join rows are
+    routed through a broadcast join while AQE keeps handling
+    everything else. ``broadcast_threshold``: a positive value is the
+    hub cutoff itself (the reference's manual skew-join threshold,
+    TwoPhase.scala:160-173; two-phase algorithm only). ``-1`` (default)
+    derives it as ``max(spark.graphframes_spark.cc.giantStarFloor (1e6),
     giantStarFactor (4) × symmetrized_rows / shuffle_partitions)`` —
     both the per-key degree and the total are counted over the
     SYMMETRIZED edge relation (both orientations), so the contract is
     "a key hotter than ``factor``× the even symmetrized per-task
     share"; relative to the ORIENTED rows feeding the large-star join
-    the effective multiplier is 2×``factor`` — detected each iteration
-    from the convergence probe's aggregate (no extra shuffle; one
-    bounded collect) and routed through a broadcast join while AQE
-    keeps handling everything else. Set ``giantStarFactor=0`` to
-    disable. Results are identical either way — only the join strategy
-    for the detected keys changes.
+    the effective multiplier is 2×``factor``. Set ``giantStarFactor=0``
+    to disable the derived cutoff. Results are identical either way —
+    only the join strategy for the detected keys changes.
 
     The two-phase loop stops once the edge set is a star forest centred
     on each component's minimum (see ``_min_nbr_stats``).
@@ -439,12 +394,12 @@ def connected_components(
         )
     if broadcast_threshold != -1 and broadcast_threshold <= 0:
         raise GraphFramesError(
-            "broadcast_threshold must be -1 (AQE skew handling) or a "
-            "positive hub-degree cutoff (manual skew-join mode)."
+            "broadcast_threshold must be -1 (derived hub cutoff) or a "
+            "positive hub-degree cutoff."
         )
     if broadcast_threshold != -1 and algorithm != "graphframes":
         raise GraphFramesError(
-            "Manual skew-join mode (broadcast_threshold > 0) applies only "
+            "A hub-degree cutoff (broadcast_threshold > 0) applies only "
             "to the two-phase 'graphframes' algorithm."
         )
     if algorithm == "graphx":
@@ -455,21 +410,14 @@ def connected_components(
         return randomized_contraction(
             graph, checkpoint_interval, use_labels_as_components
         )
-    from contextlib import nullcontext
-
-    from graphframes_spark.harness import aqe_disabled
-
-    manual_skew = broadcast_threshold != -1
-    guard = aqe_disabled(graph.spark) if manual_skew else nullcontext()
-    with guard:
-        return _two_phase_loop(
-            graph,
-            checkpoint_interval,
-            use_labels_as_components,
-            max_iter,
-            storage_level,
-            broadcast_threshold,
-        )
+    return _two_phase_loop(
+        graph,
+        checkpoint_interval,
+        use_labels_as_components,
+        max_iter,
+        storage_level,
+        broadcast_threshold,
+    )
 
 
 def _two_phase_loop(
@@ -483,7 +431,6 @@ def _two_phase_loop(
     from graphframes_spark.harness import get_conf, shuffle_partitions
 
     spark = graph.spark
-    manual_skew = broadcast_threshold != -1
     harness = IterationHarness(
         spark,
         checkpoint_interval=checkpoint_interval,
@@ -491,8 +438,8 @@ def _two_phase_loop(
         if storage_level is not None
         else StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    # Giant-star hybrid (AQE mode only): a key qualifies as a giant-star
-    # root when its symmetrized degree exceeds
+    # Giant-star hybrid: a key qualifies as a giant-star root when its
+    # symmetrized degree exceeds broadcast_threshold if that is set, else
     # max(floor, factor * total_rows / shuffle_partitions). NOTE the
     # denominator convention: total_rows is the SYMMETRIZED row count
     # (both orientations), which is 2x the oriented ee rows that feed the
@@ -500,15 +447,18 @@ def _two_phase_loop(
     # the effective multiplier is 2*factor. The round-10 measurements
     # (SCALE.md) were tuned with this convention; changing it would shift
     # the fire threshold, so it is documented rather than "fixed".
-    # factor <= 0 disables detection (plain AQE joins everywhere).
+    # factor <= 0 disables the derived cutoff (plain AQE joins everywhere).
     giant_factor = int(get_conf(spark, "cc.giantStarFactor", "4"))
     giant_floor = int(get_conf(spark, "cc.giantStarFloor", "1000000"))
     n_part = shuffle_partitions(spark)
 
     def _detect_giants(min_nbrs: DataFrame, total_cnt: int) -> list:
-        if manual_skew or giant_factor <= 0:
+        if broadcast_threshold > 0:
+            threshold = broadcast_threshold
+        elif giant_factor > 0:
+            threshold = max(giant_floor, giant_factor * total_cnt // n_part)
+        else:
             return []
-        threshold = max(giant_floor, giant_factor * total_cnt // n_part)
         return _giant_star_hubs(min_nbrs, total_cnt, threshold)
 
     idx_v = indexed_vertices(graph.vertices)
@@ -527,7 +477,7 @@ def _two_phase_loop(
     )
     ee = harness.persist(ee)
 
-    min_nbrs1 = harness.persist(_min_nbrs(ee, with_cnt=True))
+    min_nbrs1 = harness.persist(_min_nbrs(ee))
     total_cnt, non_star = _min_nbr_stats(min_nbrs1)
     # no edges at all, or already a star forest centred on the minima
     converged = non_star == 0
@@ -539,7 +489,7 @@ def _two_phase_loop(
             break
         # large-star: connect strictly-larger neighbors to the min neighbor.
         #
-        # AQE-mode giant-star hybrid (root-caused round 9, built round
+        # Giant-star hybrid (root-caused round 9, built round
         # 10): star contraction concentrates the giant component's edges
         # onto its minimum id — new_ee carries O(component) rows with
         # src=min, so this join's ee side has one hash partition holding
@@ -561,14 +511,9 @@ def _two_phase_loop(
         # while every other key keeps the plain shuffle join under AQE.
         # The broadcast side is the hub keys' min_nbr rows — a handful —
         # and the semi/anti hub tests are themselves broadcast joins, so
-        # no new shuffle appears on either side. The manual broadcast
-        # mode (broadcast_threshold > 0) remains the all-or-nothing
-        # reference-semantics mode for ablations.
-        if manual_skew:
-            joined = _skewed_join(
-                ee, min_nbrs1, _collect_hubs(min_nbrs1, broadcast_threshold)
-            )
-        elif giant_hubs:
+        # no new shuffle appears on either side. A positive
+        # broadcast_threshold only replaces the derived cutoff.
+        if giant_hubs:
             joined = _skewed_join(ee, min_nbrs1, giant_hubs)
         else:
             joined = ee.join(min_nbrs1, on=SRC)
@@ -578,18 +523,10 @@ def _two_phase_loop(
             ).distinct()
         )
         # small-star: min neighbor among smaller ones
-        small_aggs = [F.min(DST).alias(MIN_NBR)]
-        if manual_skew:
-            small_aggs.append(F.count("*").alias(CNT))
-        min_nbrs2 = harness.persist(ee.groupBy(SRC).agg(*small_aggs))
-        if manual_skew:
-            joined2 = _skewed_join(
-                ee, min_nbrs2, _collect_hubs(min_nbrs2, broadcast_threshold)
-            )
-        else:
-            joined2 = ee.join(min_nbrs2, on=SRC)
+        min_nbrs2 = harness.persist(ee.groupBy(SRC).agg(F.min(DST).alias(MIN_NBR)))
         new_ee = (
-            joined2.select(F.col(MIN_NBR).alias(SRC), F.col(DST))
+            ee.join(min_nbrs2, on=SRC)
+            .select(F.col(MIN_NBR).alias(SRC), F.col(DST))
             .filter(F.col(SRC) != F.col(DST))
             .union(
                 min_nbrs2.select(F.col(MIN_NBR).alias(SRC), F.col(SRC).alias(DST))
@@ -601,12 +538,13 @@ def _two_phase_loop(
             # min_nbrs from this very frame in the same loop iteration, so
             # the checkpoint materializes (and truncates lineage) inside
             # that job — one action per iteration instead of two. (The
-            # harness's lazy-checkpoint warning is about checkpoints whose
-            # materialization never comes; here it is immediate.)
+            # caveat in IterationHarness.commit's docstring is about lazy
+            # checkpoints whose materialization never comes; here it is
+            # immediate.)
             new_ee = harness.checkpoint(new_ee, eager=False)
         ee = harness.persist(new_ee)
 
-        min_nbrs1 = harness.persist(_min_nbrs(ee, with_cnt=True))
+        min_nbrs1 = harness.persist(_min_nbrs(ee))
         total_cnt, non_star = _min_nbr_stats(min_nbrs1)
         converged = non_star == 0  # ee is a star forest centred on the minima
         if not converged:

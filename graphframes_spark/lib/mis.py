@@ -9,12 +9,12 @@ nominates itself with probability p, joins the MIS when no neighbor is
 simultaneously nominated, and then leaves the arena together with its
 neighbors. Vertices with no remaining neighbors join outright.
 
-AQE is disabled for the duration of the run: ``rand(seed)`` under AQE
-stage re-execution can silently change results
-(MaximalIndependentSet.scala:104-107). Like the reference, the result is
-a *maximal* (not maximum) independent set and — being randomized — can
-vary between runs even with a fixed seed, because Spark task retry
-re-draws random numbers.
+Nomination draws are a pure md5 hash of (seed, round, id) (``_det_draw``)
+rather than the reference's ``rand()``: the result is a *maximal* (not
+maximum) independent set that depends only on the graph and the seed —
+stable under task retry, speculative execution and AQE stage
+re-execution, so AQE stays on (the reference disables it around
+``rand()``, MaximalIndependentSet.scala:104-107).
 
 Scale notes: each round is two join+agg passes over the shrinking edge
 set plus anti-joins to remove settled vertices; the MIS accumulator is
@@ -24,13 +24,12 @@ never grows.
 
 from __future__ import annotations
 
-import random
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphframes_spark.harness import IterationHarness, aqe_disabled
+from graphframes_spark.harness import IterationHarness
 from graphframes_spark.util import DST, ID, SRC
 
 if TYPE_CHECKING:
@@ -70,121 +69,104 @@ def _det_draw(iteration: int, seed: int):
 
 
 def maximal_independent_set(
-    graph: "GraphFrame",
-    seed: int = 42,
-    max_iter: int = 100,
-    deterministic: bool = False,
+    graph: "GraphFrame", seed: int = 42, max_iter: int = 100
 ) -> DataFrame:
-    """IDs of a maximal independent set: DF[id].
+    """IDs of a maximal independent set: DF[id]. Each round's nomination
+    draw is ``_det_draw(round, seed)``, so the output is a fixed function
+    of the graph and ``seed``."""
+    harness = IterationHarness(graph.spark, checkpoint_interval=1)
 
-    ``deterministic=True`` (beyond-reference, same pattern as
-    ``RandomWalkWithRestart.setDeterministic``) replaces the per-round
-    ``rand(seed)`` nomination draw with a pure md5 hash of
-    (seed, round, id): the output becomes a fixed function of the graph
-    — stable under task retry, speculative execution, AND replayable by
-    an external SQL engine. AQE stays enabled in this mode (the
-    rand-under-AQE hazard the reference guards against,
-    MaximalIndependentSet.scala:104-107, cannot occur with a
-    deterministic expression)."""
-    from contextlib import nullcontext
-
-    spark = graph.spark
-    harness = IterationHarness(spark, checkpoint_interval=1)
-
-    with nullcontext() if deterministic else aqe_disabled(spark):
-        vertices = harness.pin(
-            graph.vertices.select(F.col(ID), F.lit(0.5).cast("double").alias(PROB))
+    vertices = harness.pin(
+        graph.vertices.select(F.col(ID), F.lit(0.5).cast("double").alias(PROB))
+    )
+    # undirected, deduplicated, loop-free arena edges
+    edges = harness.pin(
+        graph.edges.select(SRC, DST)
+        .union(
+            graph.edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
         )
-        # undirected, deduplicated, loop-free arena edges
-        edges = harness.pin(
-            graph.edges.select(SRC, DST)
-            .union(
-                graph.edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-            )
-            .filter(F.col(SRC) != F.col(DST))
-            .distinct()
+        .filter(F.col(SRC) != F.col(DST))
+        .distinct()
+    )
+
+    mis_df = graph.vertices.select(F.col(ID), F.lit(False).alias(IS_MIS))
+
+    for iteration in harness.iterations(max_iter):
+        draw = _det_draw(iteration, seed)
+        effective_degrees = (
+            edges.join(vertices, vertices[ID] == edges[DST])
+            .groupBy(SRC)
+            .agg(F.sum(F.col(PROB)).alias(EFF_DEG))
         )
 
-        mis_df = graph.vertices.select(F.col(ID), F.lit(False).alias(IS_MIS))
-
-        rng = random.Random(seed)
-        for iteration in harness.iterations(max_iter):
-            iter_seed = rng.getrandbits(63)
-            draw = _det_draw(iteration, seed) if deterministic else F.rand(iter_seed)
-            effective_degrees = (
-                edges.join(vertices, vertices[ID] == edges[DST])
-                .groupBy(SRC)
-                .agg(F.sum(F.col(PROB)).alias(EFF_DEG))
+        # p update + nomination draw
+        probs = harness.persist(
+            vertices.join(effective_degrees, vertices[ID] == F.col(SRC))
+            .drop(SRC)
+            .withColumn(
+                PROB,
+                F.when(F.col(EFF_DEG) >= F.lit(2), F.col(PROB) / F.lit(2.0)).otherwise(
+                    F.when(
+                        F.lit(2) * F.col(PROB) <= F.lit(0.5), F.lit(2) * F.col(PROB)
+                    ).otherwise(F.lit(0.5))
+                ),
             )
+            .withColumn(NOMINATED, F.col(PROB) >= draw)
+            .select(ID, NOMINATED, PROB)
+        )
 
-            # p update + nomination draw
-            probs = harness.persist(
-                vertices.join(effective_degrees, vertices[ID] == F.col(SRC))
-                .drop(SRC)
-                .withColumn(
-                    PROB,
-                    F.when(F.col(EFF_DEG) >= F.lit(2), F.col(PROB) / F.lit(2.0)).otherwise(
-                        F.when(
-                            F.lit(2) * F.col(PROB) <= F.lit(0.5), F.lit(2) * F.col(PROB)
-                        ).otherwise(F.lit(0.5))
-                    ),
-                )
-                .withColumn(NOMINATED, F.col(PROB) >= draw)
-                .select(ID, NOMINATED, PROB)
+        # vertices with no surviving neighbor join the MIS outright
+        isolated = vertices.join(
+            probs.select(ID), on=ID, how="left_anti"
+        ).select(ID)
+
+        nominated_nbr = (
+            edges.join(probs, probs[ID] == edges[DST])
+            .groupBy(SRC)
+            .agg(F.bool_or(F.col(NOMINATED)).alias(HAS_NOMINATED_NBR))
+        )
+        joined_mis = (
+            probs.join(nominated_nbr, F.col(SRC) == probs[ID])
+            .filter((~F.col(HAS_NOMINATED_NBR)) & F.col(NOMINATED))
+            .select(ID)
+        )
+
+        updated_mis = (
+            mis_df.join(
+                isolated.select(F.col(ID), F.lit(True).alias("_f")), on=ID, how="left"
             )
-
-            # vertices with no surviving neighbor join the MIS outright
-            isolated = vertices.join(
-                probs.select(ID), on=ID, how="left_anti"
-            ).select(ID)
-
-            nominated_nbr = (
-                edges.join(probs, probs[ID] == edges[DST])
-                .groupBy(SRC)
-                .agg(F.bool_or(F.col(NOMINATED)).alias(HAS_NOMINATED_NBR))
+            .select(
+                F.col(ID),
+                (F.col(IS_MIS) | F.coalesce(F.col("_f"), F.lit(False))).alias(IS_MIS),
             )
-            joined_mis = (
-                probs.join(nominated_nbr, F.col(SRC) == probs[ID])
-                .filter((~F.col(HAS_NOMINATED_NBR)) & F.col(NOMINATED))
-                .select(ID)
+            .join(
+                joined_mis.select(F.col(ID), F.lit(True).alias("_f")),
+                on=ID,
+                how="left",
             )
-
-            updated_mis = (
-                mis_df.join(
-                    isolated.select(F.col(ID), F.lit(True).alias("_f")), on=ID, how="left"
-                )
-                .select(
-                    F.col(ID),
-                    (F.col(IS_MIS) | F.coalesce(F.col("_f"), F.lit(False))).alias(IS_MIS),
-                )
-                .join(
-                    joined_mis.select(F.col(ID), F.lit(True).alias("_f")),
-                    on=ID,
-                    how="left",
-                )
-                .select(
-                    F.col(ID),
-                    (F.col(IS_MIS) | F.coalesce(F.col("_f"), F.lit(False))).alias(IS_MIS),
-                )
+            .select(
+                F.col(ID),
+                (F.col(IS_MIS) | F.coalesce(F.col("_f"), F.lit(False))).alias(IS_MIS),
             )
-            # the MIS accumulator must be eagerly checkpointed every round
-            # (MaximalIndependentSet.scala:167-178); eager=True already
-            # materializes it — no separate count() action needed
-            mis_df = harness.checkpoint(updated_mis, eager=True)
+        )
+        # the MIS accumulator must be eagerly checkpointed every round
+        # (MaximalIndependentSet.scala:167-178); eager=True already
+        # materializes it — no separate count() action needed
+        mis_df = harness.checkpoint(updated_mis, eager=True)
 
-            nbrs_of_mis = edges.join(
-                joined_mis, joined_mis[ID] == edges[DST]
-            ).select(F.col(SRC))
+        nbrs_of_mis = edges.join(
+            joined_mis, joined_mis[ID] == edges[DST]
+        ).select(F.col(SRC))
 
-            vertices = harness.checkpoint(
-                probs.join(joined_mis, on=ID, how="left_anti")
-                .join(nbrs_of_mis, F.col(SRC) == probs[ID], "left_anti")
-                .select(ID, PROB),
-                eager=True,
-            )
-            harness.rotate()
-            if vertices.isEmpty():
-                break
+        vertices = harness.checkpoint(
+            probs.join(joined_mis, on=ID, how="left_anti")
+            .join(nbrs_of_mis, F.col(SRC) == probs[ID], "left_anti")
+            .select(ID, PROB),
+            eager=True,
+        )
+        harness.rotate()
+        if vertices.isEmpty():
+            break
 
-        out = mis_df.filter(F.col(IS_MIS)).select(ID)
-        return harness.finish(out)
+    out = mis_df.filter(F.col(IS_MIS)).select(ID)
+    return harness.finish(out)

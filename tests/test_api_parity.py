@@ -201,7 +201,9 @@ def test_no_classic_only_api_outside_guards():
     no RDD API, and sparkContext only inside the two try/except-guarded
     fallbacks (harness.ensure_checkpoint_dir,
     randomized_contraction._scratch_dir) that degrade gracefully when
-    Connect raises on sparkContext access."""
+    Connect raises on sparkContext access. No module writes session conf
+    either: the session is shared, so a flip would change the plans of
+    every other thread's queries while it lasts."""
     import pathlib
     import re
 
@@ -214,6 +216,8 @@ def test_no_classic_only_api_outside_guards():
             offenders.append(f"{path.name}: py4j/RDD API")
         if "sparkContext" in text and path.name not in allowed_ctx:
             offenders.append(f"{path.name}: unguarded sparkContext")
+        if re.search(r"\bconf\s*\.\s*(un)?set\s*\(", text):
+            offenders.append(f"{path.name}: session conf write")
     assert not offenders, offenders
 
 

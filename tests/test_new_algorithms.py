@@ -103,17 +103,15 @@ def test_mis_chain(spark):
 
 
 def test_mis_deterministic_mode(spark):
-    """deterministic=True: still a valid MIS, and byte-identical across
-    runs (md5 draws, no rand()) — including on a chain, where the
-    Ghaffari p-dynamics (halving/doubling) are exercised for real."""
-    g = chain_graph(spark, 12)
-    mis1 = {r["id"] for r in g.maximalIndependentSet(seed=5, deterministic=True).collect()}
-    mis2 = {r["id"] for r in g.maximalIndependentSet(seed=5, deterministic=True).collect()}
-    assert mis1 == mis2
-    _assert_is_mis(g, mis1)
-    g2 = star_graph(spark, 6)
-    mis3 = {r["id"] for r in g2.maximalIndependentSet(seed=5, deterministic=True).collect()}
-    _assert_is_mis(g2, mis3)
+    """The md5 nomination draws make the MIS a fixed function of the
+    graph and the seed: two runs are identical and valid — including on
+    a chain, where the Ghaffari p-dynamics (halving/doubling) are
+    exercised for real — and likewise on a star."""
+    for g in (chain_graph(spark, 12), star_graph(spark, 6)):
+        mis1 = {r["id"] for r in g.maximalIndependentSet(seed=5).collect()}
+        mis2 = {r["id"] for r in g.maximalIndependentSet(seed=5).collect()}
+        assert mis1 == mis2
+        _assert_is_mis(g, mis1)
 
 
 def test_mis_with_isolated(spark):
@@ -333,8 +331,8 @@ def test_cc_rejects_unknown_algorithm(friends):
 
 
 def test_cc_broadcast_threshold_contract(friends):
-    """Positive thresholds run the manual skew-join mode (round 7);
-    zero/other negatives and non-two-phase combinations are rejected."""
+    """Positive thresholds set the broadcast hub cutoff and leave the
+    partition unchanged; zero and other negatives are rejected."""
     def partition(df):
         groups = {}
         for r in df.collect():
@@ -1669,17 +1667,19 @@ def test_incremental_cc_rejects_relabeled_assignment(spark):
 
 
 def test_manual_skew_mode_hub_cap(spark, monkeypatch):
-    """A pathologically low broadcast_threshold that would collect a
-    graph-sized hub set to the driver fails loudly instead of OOMing."""
+    """A pathologically low broadcast_threshold cannot broadcast a
+    graph-sized hub set: the hub list is capped at MAX_GIANT_HUBS with a
+    warning that names the argument, and the partition stays exact."""
     from graphframes_spark.lib import connected_components as cc_mod
 
-    monkeypatch.setattr(cc_mod, "MAX_HUBS", 2)
+    monkeypatch.setattr(cc_mod, "MAX_GIANT_HUBS", 2)
     v = spark.range(0, 12).select("id")
     e = spark.createDataFrame(
         [(i, (i + 1) % 12) for i in range(12)], ["src", "dst"]
     )
-    with pytest.raises(GraphFramesError, match="hub set"):
-        GraphFrame(v, e).connectedComponents(broadcastThreshold=1)
+    with pytest.warns(UserWarning, match="broadcastThreshold"):
+        out = GraphFrame(v, e).connectedComponents(broadcastThreshold=1)
+    assert {r["component"] for r in out.collect()} == {0}
 
 
 # ----------------------------------------------------------- hyperball

@@ -156,10 +156,10 @@ def skew_join_calls(monkeypatch):
 
 
 def test_cc_manual_skew_join_matches_aqe(spark, hub_graph, skew_join_calls):
-    """Manual broadcast/skew-join CC mode (broadcast_threshold > 0,
-    reference TwoPhase.scala:160-173): hub 0 exceeds the threshold, so
-    its star-contraction joins go through the broadcast branch. The
-    component PARTITION must equal the AQE mode's."""
+    """A positive broadcast_threshold (the reference's manual skew-join
+    cutoff, TwoPhase.scala:160-173) is the giant-star hub cutoff: hub 0
+    exceeds it, so its large-star join goes through the broadcast
+    branch. The component PARTITION must equal the default run's."""
     manual = hub_graph.connectedComponents(broadcastThreshold=1000)
     assert [0] in skew_join_calls
     aqe = hub_graph.connectedComponents()
@@ -173,7 +173,7 @@ def test_cc_manual_skew_join_matches_aqe(spark, hub_graph, skew_join_calls):
 def test_cc_manual_skew_join_multi_component(spark):
     """threshold=1 makes every key with degree >1 a hub — the broadcast
     branch carries most of the join — on a graph with several
-    components, isolated vertices, and AQE restored afterwards."""
+    components and isolated vertices; AQE is left as it was."""
     v = spark.range(0, 12)
     e = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (5, 3), (6, 7), (8, 9)],
@@ -188,6 +188,80 @@ def test_cc_manual_skew_join_multi_component(spark):
         comps.setdefault(r["component"], set()).add(r["id"])
     groups = sorted(sorted(m) for m in comps.values())
     assert groups == [[0, 1, 2], [3, 4, 5], [6, 7], [8, 9], [10], [11]]
+
+
+def test_library_never_writes_session_conf(spark, hub_graph, monkeypatch):
+    """MIS and CC with a broadcast hub cutoff run without a single
+    session-conf write: the session is shared, so a write would change
+    the plans of every other thread's queries while it lasts."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    writes = []
+    for name in ("set", "unset"):
+        orig = getattr(RuntimeConfig, name)
+
+        def spy(self, *args, _name=name, _orig=orig):
+            writes.append((_name, args))
+            return _orig(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, spy)
+    assert hub_graph.maximalIndependentSet(seed=5).count() > 0
+    cc = hub_graph.connectedComponents(broadcastThreshold=1000)
+    assert cc.select("component").distinct().count() == 1
+    assert writes == []
+
+
+def test_threaded_mis_beside_cc_matches_serial(spark):
+    """MIS in one thread beside connectedComponents in another, on one
+    session, returns exactly what serial runs return."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    v = spark.range(0, 40)
+    chain = GraphFrame(
+        v, spark.createDataFrame([(i, i + 1) for i in range(39)], ["src", "dst"])
+    )
+    blocks = GraphFrame(
+        v,
+        spark.createDataFrame(
+            [(i, i + 1) for i in range(40) if i % 10 != 9], ["src", "dst"]
+        ),
+    )
+
+    def mis():
+        return sorted(r["id"] for r in chain.maximalIndependentSet(seed=3).collect())
+
+    def cc():
+        return sorted(
+            (r["id"], r["component"]) for r in blocks.connectedComponents().collect()
+        )
+
+    serial = (mis(), cc())
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = (pool.submit(mis), pool.submit(cc))
+        threaded = tuple(f.result() for f in futures)
+    assert threaded == serial
+    assert serial[1] == [(i, i - i % 10) for i in range(40)]
+
+
+def test_cc_skew_broadcast_query_takes_skew_path(spark, skew_join_calls):
+    """The cc_skew_broadcast registry query really runs the broadcast
+    path at sf0.01: its order chains keep the contraction loop iterating,
+    and customers above 20 orders are routed as hubs. Each customer stays
+    one component with its orders (the full oracle is the registry's)."""
+    import os
+
+    import __spark_entry__ as entry
+    from test_entry_contract import SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    if not os.path.isdir(sf_dir):
+        pytest.skip("sf0.01 testdata not present")
+    out = entry.queries()["cc_skew_broadcast"](spark, sf_dir)
+    assert any(skew_join_calls), skew_join_calls
+    customers = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    assert out.count() == customers + orders
+    assert out.select("component").distinct().count() == customers
 
 
 def test_cc_manual_skew_join_rejects_bad_args(spark):

@@ -12,8 +12,9 @@ Usage:
     python tools/dump_plans.py <outdir> <suffix> <query> [query ...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32) — session built exactly like bench.py so
-the plans match what the bench measures.
+SPARK_GRAFT_CPUS (default: the cores this process may run on) — session
+built by ``bench.build_session`` (heap sized to the host) so the plans
+match what the bench measures.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 class PlanCapture:
@@ -90,22 +91,9 @@ def main() -> None:
     names = sys.argv[3:]
     os.makedirs(outdir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    import bench
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("dump_plans")
-        .config("spark.driver.memory", "32g")
-        .config("spark.sql.maxPlanStringLength", str(4 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", str(2 * CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = bench.build_session(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.setCheckpointDir("/tmp/dump_plans_ckpt")
     # knob-gated variants: DUMP_PLANS_CONF="k=v,k=v" (keys get the
