@@ -10,28 +10,30 @@ all neighbors and lowers its own to the largest ``l`` such that at least
 estimates capped at its own).
 
 The reference's custom Catalyst expression ``KCoreMerge``
-(expressions/KCoreMerge.scala:33-63) is re-expressed with SQL
-higher-order functions: cap each neighbor estimate at the current core,
-sort descending, and take the h-index via an index-aware ``filter`` —
-no UDF, stays in whole-stage codegen.
+(expressions/KCoreMerge.scala:33-63) is re-expressed as a message
+reducer of codegen hash aggregates and one window: count messages by
+``(id, estimate)``, run a count in descending estimate order per id (the
+number of neighbors at or above each estimate), and take the h-index as
+``max(least(estimate, running))``. The vertex update caps it at the
+current core; that is exact, because for ``l <= core``,
+``least(m, core) >= l`` iff ``m >= l``.
 
 Edge representation matches the reference contract: supply each
 undirected edge once (either direction); the algorithm symmetrizes by
 messaging both endpoints. Scale notes: per-superstep state is one int
-per vertex; the ``collect_list`` of neighbor estimates is bounded by
-vertex degree — the same bound as the reference (hub vertices are the
-skew risk in both; estimates are 4-byte ints, so a 10^7-degree hub costs
-~40 MB, tolerable where collect-of-structs is not).
+per vertex; a hub's messages become one row per distinct neighbor
+estimate, sorted (and spilled if need be) by the window, never an
+in-memory list the size of its degree.
 """
 
 from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graphframes_spark.pregel import Pregel
+from graphframes_spark.pregel import MSG_COL_NAME, Pregel
 from graphframes_spark.util import DST, ID, SRC
 
 if TYPE_CHECKING:
@@ -40,15 +42,20 @@ if TYPE_CHECKING:
 KCORE_ID = "kcore"
 
 
-def _kcore_merge(msgs: Column, core: Column) -> Column:
-    """Largest l <= core with at least l neighbor estimates >= l.
-
-    h-index over ``least(msg, core)`` sorted descending: with the capped
-    estimates in decreasing order, positions i (1-based) satisfying
-    ``est[i] >= i`` form a prefix whose length is the h-index.
-    """
-    capped_desc = F.reverse(F.array_sort(F.transform(msgs, lambda m: F.least(m, core))))
-    return F.size(F.filter(capped_desc, lambda x, i: x >= i + F.lit(1)))
+def _h_index(msg_df: DataFrame) -> DataFrame:
+    """DF[id, msg] -> DF[id, msg]: largest l with at least l messages >= l.
+    Each distinct m offers ``least(m, #msgs >= m)``; the least m >= h offers h."""
+    counts = msg_df.groupBy(ID, MSG_COL_NAME).agg(F.count(F.lit(1)).alias("_kc_cnt"))
+    at_or_above = F.sum("_kc_cnt").over(
+        Window.partitionBy(ID)
+        .orderBy(F.col(MSG_COL_NAME).desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        counts.select(ID, F.least(F.col(MSG_COL_NAME), at_or_above).alias("_kc_h"))
+        .groupBy(ID)
+        .agg(F.max("_kc_h").cast("int").alias(MSG_COL_NAME))
+    )
 
 
 def k_core(graph: "GraphFrame", max_iter: int = 1_000_000_000) -> DataFrame:
@@ -63,7 +70,7 @@ def k_core(graph: "GraphFrame", max_iter: int = 1_000_000_000) -> DataFrame:
     )
     prepared = GraphFrame(degrees, graph.edges.select(SRC, DST))
 
-    merged = _kcore_merge(Pregel.msg(), F.col(KCORE_ID))
+    merged = F.least(Pregel.msg(), F.col(KCORE_ID))
     result = (
         prepared.pregel.setMaxIter(max_iter)
         .setCheckpointInterval(1)  # voting mode: see scc.py measurement
@@ -82,7 +89,7 @@ def k_core(graph: "GraphFrame", max_iter: int = 1_000_000_000) -> DataFrame:
         .setSkipMessagesFromNonActiveVertices(False)
         .requiredSrcColumns(KCORE_ID)
         .requiredDstColumns(KCORE_ID)
-        .aggMsgs(F.collect_list(Pregel.msg()))
+        .setMsgReducer(_h_index)
         .run()
     )
 

@@ -2,7 +2,8 @@
 compare against oracle_sql() in DuckDB at sf0.01 (rows + schema-width + values).
 
 Usage: python scripts/selfcheck.py [query ...]   (no args = all)
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01)
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.01 testdata). The session is
+``bench.build_session`` over the cores this process may run on.
 """
 
 from __future__ import annotations
@@ -12,7 +13,6 @@ import os
 import sys
 
 import duckdb
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod
@@ -46,20 +46,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     only = set(sys.argv[1:])
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("selfcheck")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        # cap the SQL status store: it retains 1000 executions even
-        # with the UI off, and iterative plans carry thousands of
-        # metrics each — a full-registry run otherwise pins GBs
-        .config("spark.sql.ui.retainedExecutions", "16")
-        .config("spark.cleaner.periodicGC.interval", "1min")
-        .getOrCreate()
-    )
+    import bench
+
+    spark = bench.build_session(len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -144,11 +144,12 @@ def test_parquet_scan_column_pruning(spark, name):
 # tools/audit_object_hash.py mechanizes the sweep by capturing the plan
 # of EVERY action a query performs (in-loop aggregates never appear in
 # the returned DataFrame's plan — checkpoints cut lineage). The full
-# 133-query sweep result lives as a table in SCALE.md: 15 queries carry
+# 136-query sweep result lives as a table in SCALE.md: 21 queries carry
 # ObjectHashAggregates, every one with a bounded-state argument
 # (landmark-count maps, single-document reassembly, k-min-capped
-# adjacency, fixed-size theta/bloom sketches, walk-length batches) or a
-# documented bounded alternative (dp_profile exact=False t-digest).
+# adjacency, fixed-size theta/bloom/HLL sketches, walk-length batches),
+# a documented bounded alternative (dp_profile exact=False t-digest) or a
+# per-operator argument (coloring's neighbor-color set, cycles' paths).
 #
 # This test pins the regression that actually bites at 100 TB: the
 # ITERATIVE hot loops must stay free of object-hash aggregation — a
@@ -179,16 +180,14 @@ def _sweep(spark, names):
     if _repo_root not in _sys.path:
         _sys.path.insert(0, _repo_root)
     import __spark_entry__ as em
-    from tools.audit_object_hash import PlanCapture, matched_fragments
+    from tools.audit_object_hash import matched_fragments
+    from tools.profile_actions import ActionProfiler
 
     out = {}
     for name in names:
-        cap = PlanCapture()
-        with cap:
-            df = em.queries()[name](spark, SF_DIR)
-            df.count()
-            cap.plans.append(df._jdf.queryExecution().executedPlan().toString())
-        out[name] = matched_fragments(cap.plans)
+        with ActionProfiler(spark) as prof:
+            em.queries()[name](spark, SF_DIR).count()
+        out[name] = matched_fragments(prof.plans)
     return out
 
 
@@ -209,3 +208,15 @@ def test_object_hash_audit_capture_detects_known_bounded_hit(spark):
     assert any(
         "collect_list" in frag for frag in hits["shortest_paths"]
     ), "plan capture lost sight of a known ObjectHashAggregate"
+
+
+def test_object_hash_audit_capture_sees_in_loop_plans(spark):
+    # kcore's supersteps run behind per-superstep checkpoints, so the
+    # message column appears only in plans captured inside the loop: a
+    # capture that sees just the returned DataFrame passes the hot-loop
+    # test without ever looking at a loop
+    from tools.profile_actions import ActionProfiler
+
+    with ActionProfiler(spark) as prof:
+        entry_mod.queries()["kcore"](spark, SF_DIR).count()
+    assert any("_pregel_msg" in plan for plan in prof.plans[:-1])

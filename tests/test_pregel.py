@@ -371,11 +371,13 @@ def ring(spark):
 
 def _executed_plans(action) -> str:
     """Physical plans of every action ``action`` runs, in-loop ones too."""
-    from tools.dump_plans import PlanCapture
+    from pyspark.sql import SparkSession
 
-    with PlanCapture() as cap:
+    from tools.profile_actions import ActionProfiler
+
+    with ActionProfiler(SparkSession.active()) as prof:
         action()
-    plans = "\n".join(cap.plans)
+    plans = "\n".join(prof.plans)
     # the superstep joins (keyed on the edge source) were seen
     assert "_pregel_edge_src" in plans
     return plans

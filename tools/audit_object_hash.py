@@ -3,15 +3,16 @@ collect_set aggregates that produce them) executed by ANY registry
 query — including aggregates inside iterative loops, which never appear
 in the final returned DataFrame's plan because checkpoints cut lineage.
 
-Round-10 motivation (VERDICT r9 #3): CDLP's two-level-vote win came from
-spotting ONE ObjectHashAggregate in a hot loop (mode() on hub-keyed
-groups — a per-group open hash map, row-at-a-time, allocation churn).
-This sweep mechanizes that audit: capture the physical plan of every
-action each query performs, grep for object-hash aggregation, and force
-each hit to carry an explicit boundedness argument (the allowlist lives
-in tests/test_plan_audit.py; SCALE.md carries the table).
+CDLP's two-level-vote win came from spotting ONE ObjectHashAggregate in
+a hot loop (mode() on hub-keyed groups — a per-group open hash map,
+row-at-a-time, allocation churn). This sweep mechanizes that audit: the
+plan of every action each query performs (``ActionProfiler.plans``) is
+grepped for object-hash aggregation, and each hit must carry an explicit
+boundedness argument (the allowlist lives in tests/test_plan_audit.py;
+SCALE.md carries the table).
 
 Usage: python tools/audit_object_hash.py [query ...]  (default: all)
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.001 testdata).
 Prints one JSON object: {query: [matched plan fragments…]}.
 """
 
@@ -26,68 +27,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
-# DataFrame methods that trigger execution of the CURRENT plan. persist/
-# cache are lazy (their plan executes through one of these); write-based
-# sinks go through DataFrameWriter.save which the registry queries don't
-# use at audit time (the audit itself counts the returned DF).
-ACTION_METHODS = (
-    "collect",
-    "count",
-    "first",
-    "head",
-    "take",
-    "toPandas",
-    "localCheckpoint",
-    "checkpoint",
-    "foreach",
-    "foreachPartition",
-)
-
 AGG_PATTERN = re.compile(
     r"ObjectHashAggregate|collect_list|collect_set|\bmode\(", re.IGNORECASE
 )
-
-
-class PlanCapture:
-    """Context manager: patches the DataFrame action surface so every
-    executed plan's string is recorded (AQE initial plan — aggregate
-    physical selection is static, which is all this audit needs)."""
-
-    def __init__(self):
-        self.plans: list[str] = []
-        self._saved = {}
-
-    def __enter__(self):
-        from pyspark.sql import DataFrame
-
-        capture = self
-
-        def wrap(name, orig):
-            def patched(df_self, *a, **kw):
-                try:
-                    capture.plans.append(
-                        df_self._jdf.queryExecution().executedPlan().toString()
-                    )
-                except Exception:
-                    pass  # streaming frames etc. — no batch plan to audit
-                return orig(df_self, *a, **kw)
-
-            return patched
-
-        for name in ACTION_METHODS:
-            orig = getattr(DataFrame, name, None)
-            if orig is None:
-                continue
-            self._saved[name] = orig
-            setattr(DataFrame, name, wrap(name, orig))
-        return self
-
-    def __exit__(self, *exc):
-        from pyspark.sql import DataFrame
-
-        for name, orig in self._saved.items():
-            setattr(DataFrame, name, orig)
-        return False
 
 
 def matched_fragments(plans: list[str]) -> list[str]:
@@ -105,38 +47,27 @@ def matched_fragments(plans: list[str]) -> list[str]:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    import bench
     import __spark_entry__ as entry_mod
+    from tools.profile_actions import ActionProfiler
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = bench.build_session(len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entry_mod.queries()
     names = sys.argv[1:] or list(queries)
     report: dict[str, list[str]] = {}
     for name in names:
-        cap = PlanCapture()
         try:
-            with cap:
-                df = queries[name](spark, SF_DIR)
-                df.count()
-                cap.plans.append(
-                    df._jdf.queryExecution().executedPlan().toString()
-                )
+            with ActionProfiler(spark) as prof:
+                queries[name](spark, SF_DIR).count()
         except Exception as exc:  # keep sweeping; report the failure
             report[name] = [f"ERROR: {type(exc).__name__}: {exc}"[:300]]
             continue
-        hits = matched_fragments(cap.plans)
+        hits = matched_fragments(prof.plans)
         if hits:
             report[name] = hits
-        print(f"# {name}: {len(hits)} hit(s)", file=sys.stderr)
+        print(f"# {name}: {len(hits)} hit(s) in {len(prof.plans)} plans", file=sys.stderr)
     print(json.dumps(report, indent=2))
 
 

@@ -4,6 +4,7 @@ Runs every ``queries()`` entry against its ``oracle_sql()`` at a given SF
 and compares row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+(session: ``bench.build_session`` over the cores this process may run on)
 
 Set CHECK_ORACLES_JSON=<path> to also write a machine-readable summary
 (per-query status) mirroring the driver's CORRECTNESS file shape.
@@ -17,7 +18,6 @@ import sys
 
 import duckdb
 import pandas as pd
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, ".")
 import __spark_entry__ as entry_mod
@@ -128,20 +128,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        # cap the SQL status store: it retains 1000 executions even
-        # with the UI off, and iterative plans carry thousands of
-        # metrics each — a full-registry run otherwise pins GBs
-        .config("spark.sql.ui.retainedExecutions", "16")
-        .config("spark.cleaner.periodicGC.interval", "1min")
-        .getOrCreate()
-    )
+    import bench  # here, not at the top: perfbench imports canonicalize_pair
+
+    spark = bench.build_session(len(os.sched_getaffinity(0)))
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -1,14 +1,18 @@
 """Per-action profiler for one or more queries() entries.
 
-Wraps the DataFrame action surface (count/first/collect/localCheckpoint/
-checkpoint/isEmpty) and records each OUTERMOST action: Spark 4's
-``first()`` runs ``head()`` → ``take()`` → ``collect()``, so only the call
-the caller made is timed, and the summed action time never exceeds the
-wall. Each action runs in its own job group, so the Spark jobs and stages
-it started are read back from the status tracker, and the generated
-classes Janino compiled during it come from ``CodegenMetrics``. Runs each
-query end-to-end (cold then warm) and prints every action sorted by
-duration — the direct answer to "where do this query's seconds go".
+Wraps the DataFrame action surface (``ACTIONS``) and records each
+OUTERMOST action: Spark 4's ``first()`` runs ``head()`` → ``take()`` →
+``collect()``, so only the call the caller made is timed, and the summed
+action time never exceeds the wall. Each action runs in its own job group,
+so the Spark jobs and stages it started are read back from the status
+tracker, and the generated classes Janino compiled during it come from
+``CodegenMetrics``. Each action also keeps its executed-plan string, taken
+after the timer stops: checkpoints cut lineage, so an iterative
+algorithm's in-loop plans are only visible here, never in the returned
+DataFrame's plan (``tools/audit_object_hash.py`` and ``dump_plans.py``
+read them). Runs each query end-to-end (cold then warm) and prints every
+action sorted by duration — the direct answer to "where do this query's
+seconds go".
 
 Usage: python tools/profile_actions.py <query[,query...]> [sf_dir] [repeats]
 (``SPARK_GRAFT_CPUS`` sets the local cores; default: the cores this
@@ -31,7 +35,10 @@ try:  # Spark 4: sessions build the classic subclass, which overrides actions
 except ImportError:  # pragma: no cover
     from pyspark.sql import DataFrame
 
-ACTIONS = ("count", "first", "collect", "localCheckpoint", "checkpoint", "isEmpty")
+ACTIONS = (
+    "count", "first", "head", "take", "collect", "toPandas", "isEmpty",
+    "foreach", "foreachPartition", "localCheckpoint", "checkpoint",
+)
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description")
 
 
@@ -42,6 +49,7 @@ class Action:
     seconds: float
     group: str
     classes: int
+    plan: str
     jobs: int = 0
     stages: int = 0
 
@@ -55,6 +63,14 @@ def _caller() -> str:
     return f"{os.path.basename(frames[-1].filename)}:{frames[-1].lineno}" if frames else "?"
 
 
+def _executed_plan(df) -> str:
+    """An AQE plan that has run prints its final and its initial plan."""
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    except Exception:  # streaming frames have no batch plan
+        return ""
+
+
 class ActionProfiler:
     """Records the outermost DataFrame actions run while installed::
 
@@ -62,6 +78,7 @@ class ActionProfiler:
             df.first()
         prof.resolve()  # fills in jobs and stages
         prof.events     # [Action(method="first", jobs=1, ...)]
+        prof.plans      # each action's executed plan, in order
     """
 
     def __init__(self, spark) -> None:
@@ -98,7 +115,8 @@ class ActionProfiler:
                 classes = prof._compiled() - compiled
                 for p, v in zip(_GROUP_PROPS, saved):
                     sc.setLocalProperty(p, v)
-                prof.events.append(Action(meth, where, seconds, group, classes))
+                plan = _executed_plan(df)
+                prof.events.append(Action(meth, where, seconds, group, classes, plan))
                 prof._depth -= 1
 
         return timed
@@ -113,6 +131,10 @@ class ActionProfiler:
         for meth, orig in self._saved.items():
             setattr(DataFrame, meth, orig)
         self._saved = {}
+
+    @property
+    def plans(self) -> list[str]:
+        return [e.plan for e in self.events]
 
     def resolve(self) -> None:
         """Read each action's jobs and stages (skipped ones included)
