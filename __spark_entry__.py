@@ -543,9 +543,10 @@ def q_shortest_paths_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted SSSP (lib/sssp.py) on the per-user event chains with the
-    source event's value as the edge weight; chains have a unique path
-    per pair, so the DuckDB oracle is an exact prefix-sum difference."""
+    """Weighted SSSP (lib/shortest_paths.py shortest_paths_weighted) on
+    the per-user event chains with the source event's value as the edge
+    weight; chains have a unique path per pair, so the DuckDB oracle is
+    an exact prefix-sum difference."""
     events = _read_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     edges = events.select(

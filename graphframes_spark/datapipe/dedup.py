@@ -98,6 +98,37 @@ def minhash_signature(shingle_col: Column, num_perm: int) -> Column:
     )
 
 
+def _minhash_sigs(
+    df: DataFrame, id_col: str, text_col: str, shingle_len: int, num_perm: int
+) -> DataFrame:
+    """DF[_id, _sig]: the ``minhash_signature`` values, computed by
+    explode + one codegen ``min`` per permutation (whole-stage codegen
+    and map-side partial aggregation; measurably faster than the
+    per-row HOF fold). A document with fewer than ``shingle_len``
+    tokens has no shingles, so it gets no row and is never a candidate."""
+    hashed = df.select(
+        F.col(id_col).alias("_id"),
+        F.explode(shingles(tokenize(F.col(text_col)), shingle_len)).alias("_s"),
+    ).select(
+        "_id",
+        F.conv(F.substring(F.md5("_s"), 1, 12), 16, 10).cast("long").alias("_h1"),
+        F.conv(F.substring(F.md5("_s"), 13, 12), 16, 10).cast("long").alias("_h2"),
+    )
+    mins = hashed.groupBy("_id").agg(
+        *[
+            F.min(
+                (F.col("_h1") + F.lit(p) * F.col("_h2")).bitwiseAND(
+                    F.lit(_MINHASH_MASK)
+                )
+            ).alias(f"_m{p}")
+            for p in range(num_perm)
+        ]
+    )
+    return mins.select(
+        "_id", F.array(*[F.col(f"_m{p}") for p in range(num_perm)]).alias("_sig")
+    )
+
+
 def _band_table(
     df: DataFrame, id_col: str, sig_col: str, num_bands: int, rows_per_band: int
 ) -> DataFrame:
@@ -201,30 +232,7 @@ def minhash_lsh_dedup(
     assert num_perm % num_bands == 0
     rows_per_band = num_perm // num_bands
 
-    # signature via explode -> 32 codegen min-aggregates (whole-stage
-    # codegen + map-side partial aggregation; measurably faster than the
-    # equivalent per-row HOF fold of minhash_signature, same values)
-    hashed = df.select(
-        F.col(id_col).alias(ID),
-        F.explode(shingles(tokenize(F.col(text_col)), shingle_len)).alias("_s"),
-    ).select(
-        ID,
-        F.conv(F.substring(F.md5("_s"), 1, 12), 16, 10).cast("long").alias("_h1"),
-        F.conv(F.substring(F.md5("_s"), 13, 12), 16, 10).cast("long").alias("_h2"),
-    )
-    mins = hashed.groupBy(ID).agg(
-        *[
-            F.min(
-                (F.col("_h1") + F.lit(p) * F.col("_h2")).bitwiseAND(
-                    F.lit(_MINHASH_MASK)
-                )
-            ).alias(f"_m{p}")
-            for p in range(num_perm)
-        ]
-    )
-    sigs = mins.select(
-        ID, F.array(*[F.col(f"_m{p}") for p in range(num_perm)]).alias("_sig")
-    ).persist()
+    sigs = _minhash_sigs(df, id_col, text_col, shingle_len, num_perm).persist()
     # Band-join shape: Catalyst never dedups the two sides of the banding
     # self-join (no ReuseExchange / AQE stage reuse fires — measured,
     # round 12), so past the broadcast threshold the band table is built
@@ -237,7 +245,7 @@ def minhash_lsh_dedup(
     # cache reads of the band table cost more than the one exchange and
     # one Generate they remove. The narrow band rows are cheap to
     # shuffle; the double build is cheap to recompute.
-    cands = lsh_candidate_pairs(sigs, ID, "_sig", num_bands, rows_per_band)
+    cands = lsh_candidate_pairs(sigs, "_id", "_sig", num_bands, rows_per_band)
     cands = cands.persist()
 
     # shingles only for candidate-pair members: semi-join then recompute
@@ -787,7 +795,10 @@ def cross_corpus_dedup(
     ``method='minhash'``: MinHash-LSH band join *across* the corpora
     (incoming bands probe reference bands — never incoming×incoming, so
     a duplicate-heavy batch cannot self-collapse), exact-Jaccard
-    verification at ``threshold``, anti-join on verified matches.
+    verification at ``threshold``, anti-join on verified matches. A
+    document with fewer than ``shingle_len`` tokens has no shingles and
+    is never a candidate, so it always survives; use ``method='exact'``
+    for such short documents.
     """
     ref_id = ref_id_col or id_col
     ref_text = ref_text_col or text_col
@@ -805,49 +816,18 @@ def cross_corpus_dedup(
     assert num_perm % num_bands == 0
     rows_per_band = num_perm // num_bands
 
-    def _sigs(df: DataFrame, idc: str, txtc: str) -> DataFrame:
-        # signature only (num_perm longs/doc) — shingle arrays are
-        # corpus-sized and recomputed later for candidate docs only
-        sh = df.select(
-            F.col(idc).alias("_id"),
-            shingles(tokenize(F.col(txtc)), shingle_len).alias("_sh"),
-        )
-        return sh.select(
-            "_id", minhash_signature(F.col("_sh"), num_perm).alias("_sig")
-        )
-
-    def _bands(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.md5(
-                                F.concat_ws(
-                                    "|",
-                                    *[
-                                        F.element_at(
-                                            F.col("_sig"), b * rows_per_band + r + 1
-                                        )
-                                        for r in range(rows_per_band)
-                                    ],
-                                )
-                            ).alias("bhash"),
-                        )
-                        for b in range(num_bands)
-                    ]
-                )
-            ).alias("_b"),
-        ).select("_id", "_b.band", "_b.bhash")
-
-    inc_sigs = _sigs(incoming, id_col, text_col).persist()
-    ref_sigs = _sigs(reference, ref_id, ref_text).persist()
+    inc_sigs = _minhash_sigs(incoming, id_col, text_col, shingle_len, num_perm)
+    inc_sigs = inc_sigs.persist()
+    ref_sigs = _minhash_sigs(reference, ref_id, ref_text, shingle_len, num_perm)
+    ref_sigs = ref_sigs.persist()
     cands = (
-        _bands(inc_sigs)
+        _band_table(inc_sigs, "_id", "_sig", num_bands, rows_per_band)
         .withColumnRenamed("_id", "_inc_id")
-        .join(_bands(ref_sigs).withColumnRenamed("_id", "_ref_id"), on=["band", "bhash"])
+        .join(
+            _band_table(ref_sigs, "_id", "_sig", num_bands, rows_per_band)
+            .withColumnRenamed("_id", "_ref_id"),
+            on=["band", "bhash"],
+        )
         .select("_inc_id", "_ref_id")
         .distinct()
         .persist()

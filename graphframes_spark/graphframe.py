@@ -577,7 +577,7 @@ class GraphFrame:
         ``distances: map<idType, double>``. Beyond-reference: the
         reference documents SSSP only as a Pregel recipe (user-guide
         10-pregel.md:46) and validates it via LDBC SSSP outputs."""
-        from graphframes_spark.lib.sssp import shortest_paths_weighted
+        from graphframes_spark.lib.shortest_paths import shortest_paths_weighted
 
         return shortest_paths_weighted(self, landmarks, weightCol, isDirected, maxIter)
 

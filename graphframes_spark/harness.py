@@ -18,17 +18,6 @@ from typing import Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-CONF_PREFIX = "spark.graphframes_spark."
-
-
-def get_conf(spark: SparkSession, key: str, default: str) -> str:
-    """Read an engine conf key (``spark.graphframes_spark.<key>``)."""
-    try:
-        return spark.conf.get(CONF_PREFIX + key, default)
-    except Exception:
-        return default
-
-
 def shuffle_partitions(spark: SparkSession, default: int = 200) -> int:
     """Current ``spark.sql.shuffle.partitions`` as an int, tolerant of
     non-numeric platform values (some managed runtimes set it to

@@ -114,11 +114,25 @@ def _min_nbr_stats(min_nbrs: DataFrame):
     return row[0] or 0, row[1]
 
 
+# Derived giant-star hub cutoff: a key qualifies when its symmetrized
+# degree exceeds max(GIANT_STAR_FLOOR, GIANT_STAR_FACTOR * total_rows /
+# shuffle_partitions). total_rows counts the SYMMETRIZED rows (both
+# orientations), 2x the oriented rows that feed the large-star join, so
+# relative to the oriented even per-task share the multiplier is
+# 2*factor; the round-10 measurements (SCALE.md) were tuned with this
+# convention. The floor keeps small and medium graphs, where even a
+# skewed key fits one task, on the detection-free path.
+GIANT_STAR_FACTOR = 4
+GIANT_STAR_FLOOR = 1_000_000
+
 # Defensive cap on the per-iteration giant-star hub set (the math bound
-# is min(total/threshold, n_part/factor) keys — a handful — but a
-# misconfigured floor or broadcastThreshold shouldn't be able to
-# broadcast millions of keys).
+# is min(total/threshold, n_part/factor) keys — a handful — but a low
+# broadcastThreshold shouldn't be able to broadcast millions of keys).
 MAX_GIANT_HUBS = 4096
+
+
+def _giant_star_cutoff(total_cnt: int, n_part: int) -> int:
+    return max(GIANT_STAR_FLOOR, GIANT_STAR_FACTOR * total_cnt // n_part)
 
 
 def _giant_star_hubs(
@@ -146,9 +160,9 @@ def _giant_star_hubs(
         warnings.warn(
             f"giant-star detection matched more than {MAX_GIANT_HUBS} keys at "
             f"threshold {threshold}; truncating to the {MAX_GIANT_HUBS} heaviest "
-            "(the rest stay on the shuffle path). Check broadcastThreshold or "
-            "cc.giantStarFactor/cc.giantStarFloor — a threshold this low "
-            "broadcasts far more keys than skew mitigation needs.",
+            "(the rest stay on the shuffle path). Check broadcastThreshold — "
+            "a threshold this low broadcasts far more keys than skew "
+            "mitigation needs.",
             stacklevel=2,
         )
         rows = rows[:MAX_GIANT_HUBS]
@@ -368,15 +382,12 @@ def connected_components(
     everything else. ``broadcast_threshold``: a positive value is the
     hub cutoff itself (the reference's manual skew-join threshold,
     TwoPhase.scala:160-173; two-phase algorithm only). ``-1`` (default)
-    derives it as ``max(spark.graphframes_spark.cc.giantStarFloor (1e6),
-    giantStarFactor (4) × symmetrized_rows / shuffle_partitions)`` —
-    both the per-key degree and the total are counted over the
-    SYMMETRIZED edge relation (both orientations), so the contract is
-    "a key hotter than ``factor``× the even symmetrized per-task
-    share"; relative to the ORIENTED rows feeding the large-star join
-    the effective multiplier is 2×``factor``. Set ``giantStarFactor=0``
-    to disable the derived cutoff. Results are identical either way —
-    only the join strategy for the detected keys changes.
+    derives it as ``max(GIANT_STAR_FLOOR (1e6), GIANT_STAR_FACTOR (4) ×
+    symmetrized_rows / shuffle_partitions)``: a key hotter than 4× the
+    even symmetrized per-task share, with both the per-key degree and
+    the total counted over both edge orientations. Results are
+    identical either way — only the join strategy for the detected keys
+    changes.
 
     The two-phase loop stops once the edge set is a star forest centred
     on each component's minimum (see ``_min_nbr_stats``).
@@ -428,7 +439,7 @@ def _two_phase_loop(
     storage_level: Optional[StorageLevel],
     broadcast_threshold: int,
 ) -> DataFrame:
-    from graphframes_spark.harness import get_conf, shuffle_partitions
+    from graphframes_spark.harness import shuffle_partitions
 
     spark = graph.spark
     harness = IterationHarness(
@@ -438,27 +449,16 @@ def _two_phase_loop(
         if storage_level is not None
         else StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    # Giant-star hybrid: a key qualifies as a giant-star root when its
-    # symmetrized degree exceeds broadcast_threshold if that is set, else
-    # max(floor, factor * total_rows / shuffle_partitions). NOTE the
-    # denominator convention: total_rows is the SYMMETRIZED row count
-    # (both orientations), which is 2x the oriented ee rows that feed the
-    # large-star join — so relative to the oriented even per-task share
-    # the effective multiplier is 2*factor. The round-10 measurements
-    # (SCALE.md) were tuned with this convention; changing it would shift
-    # the fire threshold, so it is documented rather than "fixed".
-    # factor <= 0 disables the derived cutoff (plain AQE joins everywhere).
-    giant_factor = int(get_conf(spark, "cc.giantStarFactor", "4"))
-    giant_floor = int(get_conf(spark, "cc.giantStarFloor", "1000000"))
+    # giant-star hybrid: broadcast_threshold, if set, replaces the
+    # derived hub cutoff
     n_part = shuffle_partitions(spark)
 
     def _detect_giants(min_nbrs: DataFrame, total_cnt: int) -> list:
-        if broadcast_threshold > 0:
-            threshold = broadcast_threshold
-        elif giant_factor > 0:
-            threshold = max(giant_floor, giant_factor * total_cnt // n_part)
-        else:
-            return []
+        threshold = (
+            broadcast_threshold
+            if broadcast_threshold > 0
+            else _giant_star_cutoff(total_cnt, n_part)
+        )
         return _giant_star_hubs(min_nbrs, total_cnt, threshold)
 
     idx_v = indexed_vertices(graph.vertices)

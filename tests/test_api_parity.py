@@ -221,33 +221,15 @@ def test_no_classic_only_api_outside_guards():
     assert not offenders, offenders
 
 
-def test_readme_conf_key_tables_match_code():
-    """Every ``get_conf(spark, "<key>", "<default>")`` call in the library
-    is listed in a README "Conf key" table with the same default, and the
-    tables list no key the library does not read."""
+def test_library_reads_no_engine_conf_key():
+    """No library module reads a ``spark.graphframes_spark.`` conf key:
+    every tuning constant is a module constant or a per-call argument."""
     import pathlib
-    import re
 
-    repo = pathlib.Path(__file__).resolve().parents[1]
-    in_code: dict[str, set[str]] = {}
-    call = re.compile(r'get_conf\(\s*[\w.]+\s*,\s*"([^"]+)"\s*,\s*"([^"]*)"\s*\)')
-    for path in sorted((repo / "graphframes_spark").rglob("*.py")):
-        for key, default in call.findall(path.read_text()):
-            in_code.setdefault(key, set()).add(default)
-    assert in_code, "no get_conf calls found"
-    assert all(len(d) == 1 for d in in_code.values()), in_code
-
-    in_readme: dict[str, set[str]] = {}
-    in_table = False
-    for line in (repo / "README.md").read_text().splitlines():
-        if not line.startswith("|"):
-            in_table = False
-            continue
-        cells = [c.strip() for c in line.strip("|").split("|")]
-        if cells[0].startswith("Conf key"):
-            in_table = True
-            continue
-        m = re.fullmatch(r"`([^`]+)`", cells[0])
-        if in_table and m and len(cells) > 1:
-            in_readme.setdefault(m.group(1), set()).add(cells[1].strip("`"))
-    assert in_readme == in_code
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "graphframes_spark"
+    offenders = [
+        str(path.relative_to(pkg))
+        for path in sorted(pkg.rglob("*.py"))
+        if "spark.graphframes_spark." in path.read_text()
+    ]
+    assert not offenders, offenders

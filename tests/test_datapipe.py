@@ -1029,6 +1029,34 @@ def test_cross_corpus_dedup_minhash(spark, docs):
     assert {r["id"] for r in out.collect()} == {5}
 
 
+def test_cross_corpus_dedup_minhash_short_documents(spark):
+    # fewer tokens than shingle_len: no shingles, so never a candidate
+    # (no empty-vs-empty Jaccard); method="exact" is the one for these
+    incoming = spark.createDataFrame([(1, "hello world")], ["id", "text"])
+    reference = spark.createDataFrame([(10, "hello world")], ["id", "text"])
+    out = dp.cross_corpus_dedup(incoming, reference, method="minhash", id_col="id")
+    assert {r["id"] for r in out.collect()} == {1}
+
+
+def test_minhash_sigs_match_minhash_signature(spark, docs):
+    from graphframes_spark.datapipe.dedup import _minhash_sigs
+
+    got = {
+        r["_id"]: list(r["_sig"])
+        for r in _minhash_sigs(docs, "id", "text", 3, 32).collect()
+    }
+    want = {
+        r["id"]: list(r["sig"])
+        for r in docs.select(
+            "id",
+            dp.minhash_signature(
+                dp.shingles(dp.tokenize(F.col("text")), 3), 32
+            ).alias("sig"),
+        ).collect()
+    }
+    assert got == want
+
+
 def test_cross_corpus_dedup_never_drops_novel_reference_only_overlap(spark):
     # incoming docs that only duplicate EACH OTHER are all kept: the
     # operator compares against the reference, not within the batch

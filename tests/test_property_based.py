@@ -184,6 +184,27 @@ def _sssp_oracle(edges, landmark):
     return {i: d for i, d in dist.items() if d < inf}
 
 
+def _hops_oracle(edges, landmark, directed):
+    """Driver-side BFS from the landmark against edge direction: hop
+    count v -> landmark; both directions when undirected."""
+    from collections import deque
+
+    towards = {i: set() for i in range(MAX_V)}
+    for s, d, _ in edges:
+        towards[d].add(s)
+        if not directed:
+            towards[s].add(d)
+    hops = {landmark: 0}
+    q = deque([landmark])
+    while q:
+        u = q.popleft()
+        for v in towards[u]:
+            if v not in hops:
+                hops[v] = hops[u] + 1
+                q.append(v)
+    return hops
+
+
 @pytest.mark.slow
 @given(edges=weighted_edge_sets, landmark=st.integers(0, MAX_V - 1))
 @settings(**SETTINGS)
@@ -199,6 +220,15 @@ def test_sssp_matches_bellman_ford(spark, edges, landmark):
         if landmark in r["distances"]
     }
     assert got == _sssp_oracle(edges, landmark)
+    # unweighted shortestPaths on the same graph: int hop counts
+    for directed in (True, False):
+        hops = {
+            r["id"]: r["distances"][landmark]
+            for r in g.shortestPaths([landmark], isDirected=directed).collect()
+            if landmark in r["distances"]
+        }
+        assert hops == _hops_oracle(edges, landmark, directed)
+        assert all(type(h) is int for h in hops.values())
 
 
 def _betweenness_oracle(edges, sources):

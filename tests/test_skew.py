@@ -158,16 +158,20 @@ def skew_join_calls(monkeypatch):
 def test_cc_manual_skew_join_matches_aqe(spark, hub_graph, skew_join_calls):
     """A positive broadcast_threshold (the reference's manual skew-join
     cutoff, TwoPhase.scala:160-173) is the giant-star hub cutoff: hub 0
-    exceeds it, so its large-star join goes through the broadcast
-    branch. The component PARTITION must equal the default run's."""
-    manual = hub_graph.connectedComponents(broadcastThreshold=1000)
-    assert [0] in skew_join_calls
+    (degree 10^5) exceeds both cutoffs and no other key exceeds 10, so
+    only its large-star join rows take the broadcast branch. The
+    component PARTITION must equal the default run's."""
     aqe = hub_graph.connectedComponents()
-    assert manual.select("component").distinct().count() == 1
-    joined = manual.withColumnRenamed("component", "m").join(
-        aqe.withColumnRenamed("component", "a"), on="id"
-    )
-    assert joined.filter(F.col("m") != F.col("a")).count() == 0
+    assert skew_join_calls == []
+    for threshold in (1000, 10):
+        skew_join_calls.clear()
+        manual = hub_graph.connectedComponents(broadcastThreshold=threshold)
+        assert skew_join_calls == [[0]]
+        assert manual.select("component").distinct().count() == 1
+        joined = manual.withColumnRenamed("component", "m").join(
+            aqe.withColumnRenamed("component", "a"), on="id"
+        )
+        assert joined.filter(F.col("m") != F.col("a")).count() == 0
 
 
 def test_cc_manual_skew_join_multi_component(spark):
@@ -276,65 +280,19 @@ def test_cc_manual_skew_join_rejects_bad_args(spark):
         g.connectedComponents(algorithm="graphx", broadcastThreshold=5)
 
 
-@pytest.fixture()
-def giant_star_conf(spark):
-    """Force giant-star detection on test-sized graphs: floor 10 rows,
-    factor 1 (any key above the even per-partition share qualifies)."""
-    keys = {
-        "spark.graphframes_spark.cc.giantStarFloor": "10",
-        "spark.graphframes_spark.cc.giantStarFactor": "1",
-    }
-    saved = {k: spark.conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    yield
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
-
-def test_cc_giant_star_hybrid_matches_plain_aqe(
-    spark, hub_graph, giant_star_conf, skew_join_calls
-):
-    """Round-10 giant-star hybrid: with the detection thresholds forced
-    low, hub 0 (degree 10^5) is detected from the convergence probe's
-    aggregate and its large-star join rows take the broadcast route
-    while AQE handles the rest. The component partition must be
-    identical to both the plain-AQE run and the graphx reference."""
-    hybrid = hub_graph.connectedComponents()
-    assert skew_join_calls == [[0]]
-    assert hybrid.select("component").distinct().count() == 1
-    gx = hub_graph.connectedComponents(algorithm="graphx")
-    joined = hybrid.withColumnRenamed("component", "h").join(
-        gx.withColumnRenamed("component", "g"), on="id"
-    )
-    assert joined.filter(F.col("h") != F.col("g")).count() == 0
-
-
-def test_cc_giant_star_hybrid_multi_component(spark, giant_star_conf, skew_join_calls):
-    """Forced-low thresholds on a multi-component graph with isolated
-    vertices: several keys qualify as 'giants' at once; the partition
-    must stay exact. Each hub holds about a quarter of the symmetrized
-    rows, so with 4 shuffle partitions neither would exceed the factor-1
-    share; 8 partitions put both above it."""
+def test_cc_giant_star_hybrid_multi_component(spark, skew_join_calls):
+    """Several keys qualify as giant stars at once on a multi-component
+    graph with isolated vertices: hubs 0 and 20 (symmetrized degree 13)
+    exceed the cutoff of 10 and no other key does; the partition must
+    stay exact."""
     v = spark.range(0, 40)
     edges = (
-        # two stars big enough to trip the 10-row floor after symmetrize
         [(0, i) for i in range(1, 14)]
         + [(20, i) for i in range(21, 34)]
         + [(1, 2), (21, 22), (36, 37)]
     )
     e = spark.createDataFrame(edges, ["src", "dst"])
-    g = GraphFrame(v, e)
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
-        out = g.connectedComponents()
-    finally:
-        spark.conf.set(key, saved)
+    out = GraphFrame(v, e).connectedComponents(broadcastThreshold=10)
     assert [sorted(h) for h in skew_join_calls] == [[0, 20]]
     comps = {}
     for r in out.collect():
@@ -378,24 +336,18 @@ def test_giant_star_hub_detection_bounds(spark):
     assert any("truncating" in str(w.message) for w in caught)
 
 
-def test_cc_giant_star_detection_disable_knob(spark, hub_graph, skew_join_calls):
-    """giantStarFactor=0 must disable detection entirely (plain AQE joins)
-    even when the floor is forced low enough to trigger — the documented
-    escape hatch — and results stay exact."""
-    keys = {
-        "spark.graphframes_spark.cc.giantStarFloor": "10",
-        "spark.graphframes_spark.cc.giantStarFactor": "0",
-    }
-    saved = {k: spark.conf.get(k, None) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        out = hub_graph.connectedComponents()
-        assert out.select("component").distinct().count() == 1
-        assert skew_join_calls == [], "factor=0 must not route any key through broadcast"
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+def test_giant_star_cutoff():
+    """The derived hub cutoff max(floor, factor * total // n_part),
+    without Spark: the floor holds small graphs off the broadcast path,
+    and past it the cutoff is factor times the even per-task share."""
+    from graphframes_spark.lib.connected_components import (
+        GIANT_STAR_FACTOR,
+        GIANT_STAR_FLOOR,
+        _giant_star_cutoff,
+    )
+
+    assert (GIANT_STAR_FACTOR, GIANT_STAR_FLOOR) == (4, 1_000_000)
+    assert _giant_star_cutoff(0, 8) == 1_000_000
+    assert _giant_star_cutoff(2_000_000, 8) == 1_000_000
+    assert _giant_star_cutoff(2_000_003, 8) == 1_000_001
+    assert _giant_star_cutoff(10**9, 200) == 20_000_000
