@@ -179,6 +179,11 @@ def test_rw_embeddings_builder_hash2vec(blob_graph, tmp_path):
     b.set_rw_model(
         str(tmp_path), num_walks_per_node=1, num_batches=1, walks_per_batch=4, seed=5
     )
+    # rand()/shuffle() walks differ from run to run, and on this graph
+    # about one walk set in a hundred cancels some vertex's signed hashed
+    # contexts exactly, which leaves the zero vector unnormalized; hash
+    # draws make the seed fix the walks, so the check below is repeatable
+    b._rw.setDeterministic(True)
     b.set_hash2vec(context_size=2, num_partitions=2, embeddings_dim=8)
     emb = b.run()
     rows = {r["id"]: r["vector"] for r in emb.collect()}

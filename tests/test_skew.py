@@ -158,20 +158,37 @@ def skew_join_calls(monkeypatch):
 def test_cc_manual_skew_join_matches_aqe(spark, hub_graph, skew_join_calls):
     """A positive broadcast_threshold (the reference's manual skew-join
     cutoff, TwoPhase.scala:160-173) is the giant-star hub cutoff: hub 0
-    (degree 10^5) exceeds both cutoffs and no other key exceeds 10, so
-    only its large-star join rows take the broadcast branch. The
-    component PARTITION must equal the default run's."""
+    (degree 10^5) exceeds it, so its large-star join goes through the
+    broadcast branch. The component PARTITION must equal the default
+    run's."""
     aqe = hub_graph.connectedComponents()
     assert skew_join_calls == []
-    for threshold in (1000, 10):
-        skew_join_calls.clear()
-        manual = hub_graph.connectedComponents(broadcastThreshold=threshold)
-        assert skew_join_calls == [[0]]
-        assert manual.select("component").distinct().count() == 1
-        joined = manual.withColumnRenamed("component", "m").join(
-            aqe.withColumnRenamed("component", "a"), on="id"
+    manual = hub_graph.connectedComponents(broadcastThreshold=1000)
+    assert skew_join_calls == [[0]]
+    assert manual.select("component").distinct().count() == 1
+    joined = manual.withColumnRenamed("component", "m").join(
+        aqe.withColumnRenamed("component", "a"), on="id"
+    )
+    assert joined.filter(F.col("m") != F.col("a")).count() == 0
+
+
+def test_cc_giant_star_hybrid_matches_plain_aqe(spark, hub_graph, skew_join_calls):
+    """Giant-star hybrid at a cutoff far below the hub: hub 0 (degree
+    10^5) is the only key above 10, so only its large-star join rows
+    take the broadcast route while AQE handles the rest. The component
+    partition must be identical to both the plain-AQE run and the
+    graphx reference."""
+    hybrid = hub_graph.connectedComponents(broadcastThreshold=10)
+    assert skew_join_calls == [[0]]
+    assert hybrid.select("component").distinct().count() == 1
+    for other in (
+        hub_graph.connectedComponents(),
+        hub_graph.connectedComponents(algorithm="graphx"),
+    ):
+        joined = hybrid.withColumnRenamed("component", "h").join(
+            other.withColumnRenamed("component", "o"), on="id"
         )
-        assert joined.filter(F.col("m") != F.col("a")).count() == 0
+        assert joined.filter(F.col("h") != F.col("o")).count() == 0
 
 
 def test_cc_manual_skew_join_multi_component(spark):
