@@ -909,8 +909,8 @@ class GraphFrame:
     ) -> DataFrame:
         """Update ``prevComponents`` (a DF[id, component] from an earlier
         ``connectedComponents`` run) with THIS graph's edges treated as
-        the new-arrivals delta: CC runs only on the contracted graph of
-        components touched by a cross-component new edge, so the cost is
+        the new-arrivals delta: the star-forest loop runs only on the new
+        edges mapped to their ends' previous components, so the cost is
         proportional to the delta rather than the accumulated edge set.
         Output is identical to a from-scratch run on old ∪ new edges
         (min-id labels compose across contraction). Integral-id graphs

@@ -121,6 +121,8 @@ class IterationHarness:
     def checkpoint(self, df: DataFrame, eager: bool = False) -> DataFrame:
         if self.use_local_checkpoints:
             return df.localCheckpoint(eager=eager)
+        # also for checkpoint_interval=0, whose constructor skips it
+        ensure_checkpoint_dir(self.spark)
         return df.checkpoint(eager=eager)
 
     def commit(
@@ -169,15 +171,19 @@ class IterationHarness:
         self._previous = self._current
         self._current = []
 
+    def release(self, keep: Optional[DataFrame] = None) -> None:
+        """Unpersist every tracked frame except ``keep``, which a plan
+        returned lazily still reads."""
+        for df in self._previous + self._current + self._pinned:
+            if df is not keep:
+                df.unpersist()
+        self._previous = []
+        self._current = []
+        self._pinned = []
+
     def finish(self, result: DataFrame, materialize: bool = True) -> DataFrame:
         result = result.persist(self.storage_level)
         if materialize:
             result.count()
-        for df in self._previous + self._current:
-            df.unpersist()
-        for df in self._pinned:
-            df.unpersist()
-        self._previous = []
-        self._current = []
-        self._pinned = []
+        self.release()
         return result

@@ -15,10 +15,10 @@ is what the driver oracle replays in SQL.
 
 Scale posture: per round, one symmetrized-edge join against the
 uncolored set (find local maxima), one join against the colored set
-(collect neighbor colors) and a ``collect_set`` + higher-order-function
-mex — all keyed on vertex id. The ``collect_set`` holds at most the
-vertex's already-colored neighbor colors, bounded by its degree and in
-practice by the chromatic number; the harness checkpoints each round.
+(neighbor colors) and a mex over the distinct (vertex, neighbor color)
+rows — all keyed on vertex id. The mex is built from a ``row_number``
+and a ``count_if`` (``_mex_by_src``), so no aggregate holds a per-vertex
+collection; the harness checkpoints each round.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from graphframes_spark.harness import IterationHarness
@@ -38,12 +39,17 @@ _SEP = "\x1f"
 COLOR = "color"
 
 
-def _mex(colors):
-    """Smallest non-negative int absent from the (distinct) color set."""
-    return F.aggregate(
-        F.array_sort(colors),
-        F.lit(0),
-        lambda acc, c: F.when(c == acc, acc + 1).otherwise(acc),
+def _mex_by_src(pairs: DataFrame) -> DataFrame:
+    """(src, _mex): the smallest non-negative int absent from each src's
+    colors, over distinct (src, _nc) rows. Sorted ascending, the k-th
+    distinct color (from 0) is at least k and equals k exactly while k
+    is below the mex, so the mex is the number of colors equal to their
+    rank."""
+    rank = F.row_number().over(Window.partitionBy(SRC).orderBy("_nc")) - 1
+    return (
+        pairs.withColumn("_rk", rank)
+        .groupBy(SRC)
+        .agg(F.count_if(F.col("_nc") == F.col("_rk")).cast("int").alias("_mex"))
     )
 
 
@@ -90,7 +96,7 @@ def greedy_coloring(
         winners = uncolored.join(blocked, on=ID, how="left_anti")
 
         if colored is not None:
-            nbr_colors = (
+            nbr_mex = _mex_by_src(
                 und.join(
                     winners.select(F.col(ID).alias(SRC)), on=SRC
                 )
@@ -100,19 +106,14 @@ def greedy_coloring(
                     ),
                     on=DST,
                 )
-                .groupBy(SRC)
-                .agg(F.collect_set("_nc").alias("_ncs"))
+                .select(SRC, "_nc")
+                .distinct()
             )
-            new_colored = (
-                winners.join(
-                    nbr_colors, winners[ID] == nbr_colors[SRC], "left_outer"
-                )
-                .select(
-                    winners[ID],
-                    F.when(F.col("_ncs").isNull(), F.lit(0))
-                    .otherwise(_mex(F.col("_ncs")))
-                    .alias(COLOR),
-                )
+            new_colored = winners.join(
+                nbr_mex, winners[ID] == nbr_mex[SRC], "left_outer"
+            ).select(
+                winners[ID],
+                F.coalesce(F.col("_mex"), F.lit(0)).alias(COLOR),
             )
             colored = colored.unionByName(new_colored)
         else:

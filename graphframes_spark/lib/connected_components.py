@@ -237,16 +237,19 @@ def incremental_connected_components(
     edges. Vertices absent from ``prev_components`` (newly arrived)
     start as singletons of themselves.
 
-    Plan shape: one join maps each new edge endpoint to its previous
-    component (the previous assignment is a valid refinement of the
-    final partition, so components act as supernodes); CC then runs on
-    the CONTRACTED graph — vertices are the distinct touched components
-    plus singletons, edges are the component-mapped new edges — whose
-    size is proportional to the DELTA, not the accumulated graph; one
-    final join propagates merged labels back through the previous
-    assignment. Label stability: min-id labels compose (min over merged
-    supernodes = min over their members), so the output is identical to
-    a from-scratch run on old ∪ new edges.
+    Plan shape: one join maps both ends of each new edge to their
+    previous components (the previous assignment is a valid refinement
+    of the final partition, so components act as supernodes); the
+    mapped edges are oriented ``src < dst``, stripped of self-loops and
+    deduplicated once, and the star-forest loop runs on them directly,
+    so its size is proportional to the DELTA, not the accumulated graph.
+    There is no contracted vertex relation, no surrogate indexing and
+    no labelling join. The returned
+    plan is ``assign ⟕ forest(member → root)``: a vertex whose previous
+    component became a forest member takes the root, every other vertex
+    keeps its component. Label stability: min-id labels compose (min
+    over merged supernodes = min over their members), so the output is
+    identical to a from-scratch run on old ∪ new edges.
 
     Components must live in the ID DOMAIN — the refinement/min-label
     argument needs labels that are member ids. Integral-id graphs get
@@ -258,11 +261,10 @@ def incremental_connected_components(
     long domain would NOT work here because
     ``monotonically_increasing_id`` surrogates are not stable across
     separate runs, GraphFrame.scala:1024-1043's recipe pins them only
-    within one session's partitioning); the contracted CC runs with
-    ``use_labels_as_components=True`` so merged labels stay in the id
-    domain, and the invariant guard compares lexicographically.
+    within one session's partitioning); the star-forest loop runs on the
+    labels themselves, so merged labels stay in the id domain, and the
+    invariant guard compares lexicographically.
     """
-    from graphframes_spark.graphframe import GraphFrame
     from graphframes_spark.util import GraphFramesError
 
     labels_mode = not has_integral_id_type(graph.vertices)
@@ -281,20 +283,20 @@ def incremental_connected_components(
     )
     # current assignment over the updated vertex set: previous component,
     # or self for newly arrived vertices. Materialized ONCE (lineage
-    # cut): it is the only full-vertex-set relation here and feeds five
-    # consumers (two delta-map joins, the touched-set union via them,
-    # the returned plan, and the caller's actions) — without the cut the
-    # delta-proportional cost contract collapses into repeated
-    # full-size joins. The min-member-id invariant guard (component must
-    # never exceed the member id — numeric order on integral ids,
-    # lexicographic on strings; a necessary condition for labels produced
-    # by connectedComponents / useLabelsAsComponents=True) rides the same
-    # materialization job via Observation: zero extra scans. Both cuts go
-    # through the harness, so spark.graphframes.useLocalCheckpoints=false
-    # selects reliable checkpoints here as it does in the loop they feed.
+    # cut): it is the only full-vertex-set relation here and feeds three
+    # consumers (the delta-map join, the returned plan, and the caller's
+    # actions) — without the cut the delta-proportional cost contract
+    # collapses into repeated full-size joins. The min-member-id
+    # invariant guard (component must never exceed the member id —
+    # numeric order on integral ids, lexicographic on strings; a
+    # necessary condition for labels produced by connectedComponents /
+    # useLabelsAsComponents=True) rides the same materialization job via
+    # Observation: zero extra scans. Both cuts go through the harness, so
+    # spark.graphframes.useLocalCheckpoints=false selects reliable
+    # checkpoints here as it does in the loop they feed.
     from pyspark.sql import Observation
 
-    harness = IterationHarness(graph.spark)
+    harness = IterationHarness(graph.spark, checkpoint_interval=checkpoint_interval)
     guard = Observation()
     assign = (
         graph.vertices.select(ID)
@@ -305,10 +307,11 @@ def incremental_connected_components(
                 F.when(F.col("_prev_comp") > F.col(ID), 1).otherwise(0)
             ).alias("bad_labels"),
         )
-        .select(
-            ID,
-            F.coalesce(F.col("_prev_comp"), F.col(ID)).alias("_comp"),
-        )
+    )
+    comp = F.coalesce(F.col("_prev_comp"), F.col(ID))
+    # integral ids: long components, the type connectedComponents returns
+    assign = assign.select(
+        ID, (comp if labels_mode else comp.cast("long")).alias("_comp")
     )
     assign = harness.checkpoint(assign, eager=True)
     if (guard.get.get("bad_labels") or 0) > 0:
@@ -319,39 +322,31 @@ def incremental_connected_components(
             "an assignment produced by connectedComponents, or rerun the "
             "full algorithm."
         )
-    new_edges = graph.edges.select(SRC, DST)
+    # one join maps both ends of every new edge: each edge's two end rows
+    # meet again under its (src, dst) key, where min/max of their
+    # components is the mapped edge oriented src < dst (duplicate edges
+    # merge; an edge with an end outside the vertex set keeps one row
+    # and drops out with the self-loops)
+    ends = graph.edges.select(SRC, DST, F.explode(F.array(SRC, DST)).alias(ID))
     mapped = (
-        new_edges.join(
-            assign.select(F.col(ID).alias(SRC), F.col("_comp").alias("_csrc")),
-            on=SRC,
-        )
-        .join(
-            assign.select(F.col(ID).alias(DST), F.col("_comp").alias("_cdst")),
-            on=DST,
-        )
-        .select(F.col("_csrc").alias(SRC), F.col("_cdst").alias(DST))
-        .filter(F.col(SRC) != F.col(DST))
+        ends.join(assign, on=ID)
+        .groupBy(SRC, DST)
+        .agg(F.min("_comp").alias("_lo"), F.max("_comp").alias("_hi"))
+        .filter(F.col("_lo") != F.col("_hi"))
+        .select(F.col("_lo").alias(SRC), F.col("_hi").alias(DST))
         .distinct()
     )
-    # delta-sized; scanned by touched (twice) and the contracted CC.
-    # LAZY checkpoint: the plan is cut to a leaf immediately, and the
-    # contracted CC's first convergence-stats action (which reads these
-    # edges) materializes it in the same job — one fewer delta-sized
-    # action per incremental round (an eager arm read 4.15 s vs 4.41 s,
-    # 7/10 pairs, inside noise: BENCH_knob_retire.json).
+    # delta-sized, and the loop's input as it stands: it is not persisted
+    # again. LAZY checkpoint: the plan is cut to a leaf immediately, and
+    # the loop's first convergence-stats action (which reads these edges)
+    # materializes it in the same job — one fewer delta-sized action per
+    # incremental round (an eager arm read 4.15 s vs 4.41 s, 7/10 pairs,
+    # inside noise: BENCH_knob_retire.json).
     mapped = harness.checkpoint(mapped, eager=False)
-    # contracted graph: only components touched by a cross-component new
-    # edge need to participate; untouched components keep their label
-    touched = (
-        mapped.select(F.col(SRC).alias(ID))
-        .union(mapped.select(F.col(DST).alias(ID)))
-        .distinct()
-    )
-    merged = connected_components(
-        GraphFrame(touched, mapped),
-        checkpoint_interval=checkpoint_interval,
-        use_labels_as_components=labels_mode,
-    ).select(F.col(ID).alias("_comp"), F.col(COMPONENT).alias("_merged"))
+    forest = _star_forest(harness, mapped, max_iter=100)
+    # the returned plan reads only assign and the forest
+    harness.release(keep=forest)
+    merged = forest.select(F.col(DST).alias("_comp"), F.col(SRC).alias("_merged"))
     return assign.join(merged, on="_comp", how="left").select(
         ID,
         F.coalesce(F.col("_merged"), F.col("_comp")).alias(COMPONENT),
@@ -431,27 +426,25 @@ def connected_components(
     )
 
 
-def _two_phase_loop(
-    graph: "GraphFrame",
-    checkpoint_interval: int,
-    use_labels_as_components: bool,
+def _star_forest(
+    harness: IterationHarness,
+    ee: DataFrame,
     max_iter: int,
-    storage_level: Optional[StorageLevel],
-    broadcast_threshold: int,
+    broadcast_threshold: int = -1,
 ) -> DataFrame:
+    """Alternate large-star and small-star rounds over ``ee`` (oriented
+    ``src < dst``, deduplicated, no self-loops) until it is a star
+    forest centred on each component's minimum; returns that forest as
+    (root src, member dst) rows, one per non-root vertex (``ee`` itself
+    when it already is one). Keys only need an order, so the loop runs
+    on surrogate longs and on string labels alike. Every frame it
+    persists is tracked by ``harness``, the returned one included."""
     from graphframes_spark.harness import shuffle_partitions
 
-    spark = graph.spark
-    harness = IterationHarness(
-        spark,
-        checkpoint_interval=checkpoint_interval,
-        storage_level=storage_level
-        if storage_level is not None
-        else StorageLevel.MEMORY_AND_DISK_DESER,
-    )
+    checkpoint_interval = harness.checkpoint_interval
     # giant-star hybrid: broadcast_threshold, if set, replaces the
     # derived hub cutoff
-    n_part = shuffle_partitions(spark)
+    n_part = shuffle_partitions(harness.spark)
 
     def _detect_giants(min_nbrs: DataFrame, total_cnt: int) -> list:
         threshold = (
@@ -460,22 +453,6 @@ def _two_phase_loop(
             else _giant_star_cutoff(total_cnt, n_part)
         )
         return _giant_star_hubs(min_nbrs, total_cnt, threshold)
-
-    idx_v = indexed_vertices(graph.vertices)
-    vv = idx_v.select(F.col(LONG_ID).alias(ID), F.col(ATTR))
-    raw_e = indexed_edges(graph.edges, idx_v).select(
-        F.col(LONG_SRC).alias(SRC), F.col(LONG_DST).alias(DST)
-    )
-    # orient src < dst, dedup, drop self-loops (TwoPhase.prepare)
-    ee = (
-        raw_e.filter(F.col(SRC) != F.col(DST))
-        .select(
-            F.least(F.col(SRC), F.col(DST)).alias(SRC),
-            F.greatest(F.col(SRC), F.col(DST)).alias(DST),
-        )
-        .distinct()
-    )
-    ee = harness.persist(ee)
 
     min_nbrs1 = harness.persist(_min_nbrs(ee))
     total_cnt, non_star = _min_nbr_stats(min_nbrs1)
@@ -557,6 +534,40 @@ def _two_phase_loop(
             "set became a star forest; component ids may be incomplete.",
             RuntimeWarning,
         )
+
+    return ee
+
+
+def _two_phase_loop(
+    graph: "GraphFrame",
+    checkpoint_interval: int,
+    use_labels_as_components: bool,
+    max_iter: int,
+    storage_level: Optional[StorageLevel],
+    broadcast_threshold: int,
+) -> DataFrame:
+    harness = IterationHarness(
+        graph.spark,
+        checkpoint_interval=checkpoint_interval,
+        storage_level=storage_level
+        if storage_level is not None
+        else StorageLevel.MEMORY_AND_DISK_DESER,
+    )
+    idx_v = indexed_vertices(graph.vertices)
+    vv = idx_v.select(F.col(LONG_ID).alias(ID), F.col(ATTR))
+    raw_e = indexed_edges(graph.edges, idx_v).select(
+        F.col(LONG_SRC).alias(SRC), F.col(LONG_DST).alias(DST)
+    )
+    # orient src < dst, dedup, drop self-loops (TwoPhase.prepare)
+    ee = (
+        raw_e.filter(F.col(SRC) != F.col(DST))
+        .select(
+            F.least(F.col(SRC), F.col(DST)).alias(SRC),
+            F.greatest(F.col(SRC), F.col(DST)).alias(DST),
+        )
+        .distinct()
+    )
+    ee = _star_forest(harness, harness.persist(ee), max_iter, broadcast_threshold)
 
     # assign components: member (dst) -> root (src); roots map to themselves
     indexed_label = vv.join(ee, vv[ID] == ee[DST], "left_outer").select(

@@ -41,6 +41,18 @@ def _seen(v: P.NamedVertex, prev_patterns: list[P.Pattern]) -> bool:
     return any(seen1(p) for p in prev_patterns)
 
 
+def _bound_by_edge(v: P.Pattern, prev_patterns: list[P.Pattern]) -> bool:
+    """Whether a positive edge term before this one binds ``v``. A vertex
+    bound only by a bare vertex term (the cross join that augments
+    vertices named only in negations) does not count."""
+    edges = [
+        p
+        for p in prev_patterns
+        if isinstance(p, (P.AnonymousEdge, P.NamedEdge, P.UndirectedEdge))
+    ]
+    return isinstance(v, P.NamedVertex) and _seen(v, edges)
+
+
 def _maybe_cross_join(prev: Optional[DataFrame], b: DataFrame) -> DataFrame:
     return prev.crossJoin(b) if prev is not None else b
 
@@ -226,7 +238,24 @@ def _find_incremental(
             raise InvalidPatternError(
                 "A negated term cannot be the only constraint in a motif."
             )
-        df, names = _find_incremental(gf, prev_patterns, prev, prev_names, pattern.child)
+        child = pattern.child
+        if (
+            isinstance(child, P.AnonymousEdge)
+            and _bound_by_edge(child.src, prev_patterns)
+            and _bound_by_edge(child.dst, prev_patterns)
+        ):
+            # both ends bound: the rows of prev with no such edge, which
+            # is what except returns, as one anti-join on the id fields
+            # instead of rebuilding prev ⋈ edges and anti-joining whole rows
+            tmp = f"__tmp{next(_tmp_counter)}"
+            e = gf.edges.select(
+                F.col(SRC).alias(tmp + SRC), F.col(DST).alias(tmp + DST)
+            )
+            cond = (fld(prev, child.src.name, ID) == e[tmp + SRC]) & (
+                fld(prev, child.dst.name, ID) == e[tmp + DST]
+            )
+            return prev.join(e, cond, "left_anti").distinct(), prev_names
+        df, names = _find_incremental(gf, prev_patterns, prev, prev_names, child)
         if df is not None:
             # Dataset.except is EXCEPT DISTINCT -> PySpark subtract
             df = prev.subtract(df)

@@ -1,4 +1,8 @@
+import re
+
 from pyspark.sql import functions as F
+
+from graphframes_spark import GraphFrame
 
 
 def test_find_simple_edge(friends):
@@ -79,11 +83,56 @@ def test_find_var_length(friends):
     assert df.count() == c1 + c2
 
 
+# a left anti-join keyed on two struct id fields: "[b#5.id, a#4.id], [...], LeftAnti"
+_ID_ANTI_JOIN = re.compile(r"Join \[(\w+)#\d+\.id, (\w+)#\d+\.id\], \[[^\]]*\], LeftAnti")
+
+
+def _collect_with_plans(df):
+    """``df``'s rows and the executed plans of every action that ran."""
+    from tools.profile_actions import ActionProfiler
+
+    with ActionProfiler(df.sparkSession) as prof:
+        rows = df.collect()
+    return rows, "\n".join(prof.plans)
+
+
 def test_find_negation_only_vertex_augmented(friends):
     # vertex c appears only in the negated term -> augmented as positive
     df = friends.find("(a)-[]->(b); !(b)-[]->(c)")
     assert df.columns == ["a", "b", "c"]
-    assert df.count() > 0
+    rows, plans = _collect_with_plans(df)
+    assert len(rows) > 0
+    # c is bound only by the augmenting vertex term: the except path,
+    # an anti-join on whole rows
+    assert "LeftAnti" in plans and not _ID_ANTI_JOIN.search(plans)
+
+
+def test_find_negation_bound_ends_is_one_anti_join(spark):
+    """A negated edge between two vertices bound by earlier edge terms
+    runs as one anti-join on the id fields and returns what except
+    returns, on a multigraph with duplicate edges and a self-loop."""
+    v = spark.createDataFrame([(x,) for x in "abcde"], ["id"])
+    e = spark.createDataFrame(
+        [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("b", "c"),
+         ("c", "c"), ("c", "d"), ("d", "c"), ("d", "e"), ("e", "a")],
+        ["src", "dst"],
+    )
+    g = GraphFrame(v, e)
+    df = g.find("(a)-[]->(b); !(b)-[]->(a)")
+    rows, plans = _collect_with_plans(df)
+    got = sorted(rows)
+
+    prev = g.find("(a)-[]->(b)")
+    with_edge = prev.join(
+        e, (F.col("b.id") == F.col("src")) & (F.col("a.id") == F.col("dst"))
+    ).select("a", "b")
+    expected = sorted(prev.subtract(with_edge).collect())
+    assert got == expected
+    assert {(r["a"]["id"], r["b"]["id"]) for r in got} == {
+        ("b", "c"), ("d", "e"), ("e", "a")
+    }
+    m = _ID_ANTI_JOIN.search(plans)
+    assert m and m.groups() == ("b", "a")
 
 
 def test_find_filter_on_attributes(friends):

@@ -1571,6 +1571,47 @@ def test_incremental_cc_string_ids_matches_full_recompute(spark):
     assert inc["eel"] == "ant"  # merged component takes the global min
 
 
+@pytest.mark.parametrize("seed", [3, 11])
+@pytest.mark.parametrize("string_ids", [False, True])
+def test_incremental_cc_random_splits_run_the_loop(spark, monkeypatch, seed, string_ids):
+    """Seeded random old/new splits whose mapped delta is not yet a star
+    forest, so the star-forest loop iterates on component labels (string
+    labels included, through useLabelsAsComponents=True): the update must
+    equal a from-scratch run on old ∪ new."""
+    import random
+
+    from graphframes_spark.lib import connected_components as cc
+
+    rng = random.Random(seed)
+    n = 60
+    # unpadded names, so lexicographic order differs from numeric order
+    name = (lambda i: f"n{i}") if string_ids else (lambda i: i)
+    edges = {tuple(rng.sample(range(n), 2)) for _ in range(50)}
+    old = [(name(a), name(b)) for a, b in sorted(edges)[::2]]
+    new = [(name(a), name(b)) for a, b in sorted(edges)[1::2]]
+    id_type = "string" if string_ids else "long"
+    v = spark.createDataFrame([(name(i),) for i in range(n)], f"id {id_type}")
+    schema = f"src {id_type}, dst {id_type}"
+    e_old = spark.createDataFrame(old, schema)
+    e_new = spark.createDataFrame(new, schema)
+    prev = GraphFrame(v, e_old).connectedComponents(useLabelsAsComponents=string_ids)
+
+    probes = []
+    stats = cc._min_nbr_stats
+    monkeypatch.setattr(
+        cc, "_min_nbr_stats", lambda m: probes.append(1) or stats(m)
+    )
+    inc = GraphFrame(v, e_new).incrementalConnectedComponents(prev)
+    got = {r["id"]: r["component"] for r in inc.collect()}
+    monkeypatch.undo()
+    assert len(probes) >= 3  # the first probe, then at least two iterations
+    assert inc.schema == prev.select("id", "component").schema
+    full = GraphFrame(v, spark.createDataFrame(old + new, schema)).connectedComponents(
+        useLabelsAsComponents=string_ids
+    )
+    assert got == {r["id"]: r["component"] for r in full.collect()}
+
+
 def test_incremental_cc_string_ids_empty_delta_and_new_singleton(spark):
     v_old = spark.createDataFrame([("x",), ("y",)], ["id"])
     e_old = spark.createDataFrame([("x", "y")], ["src", "dst"])

@@ -169,6 +169,7 @@ HOT_LOOP_QUERIES = [
     "kcore",
     "bfs",
     "ppr",
+    "coloring_regions",
 ]
 
 
